@@ -33,7 +33,7 @@ final case class DataDictionary(relations: Map[String, StructType]) {
       case "parquet" =>
         // Cast through the declared dd schema like the CSV path, so dd/file
         // type drift surfaces at scan time instead of deep in a query.
-        val raw = spark.read.parquet(s"$dataDir/$rel.parquet")
+        val raw = graft.readParquet(spark, s"$dataDir/$rel.parquet")
         raw.select(st.fields.map(f =>
           raw(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
       case "csv" =>

@@ -37,8 +37,14 @@ final class CappedItemSetBuffer {
   * Distinctness is Catalyst value equality (the same equality
   * `distinct()` uses on atomic types); the returned array is sorted by
   * the type's natural ordering, so consumers get a deterministic layout
-  * without an extra `sort_array`. Registered as
-  * `capped_item_set(item, cap)`; `cap` must be a positive literal.
+  * without an extra `sort_array`. Float and Double items are normalized
+  * on insert the way Catalyst normalizes grouping keys: -0.0 becomes
+  * 0.0 and every NaN one shared NaN value, so they dedup as `distinct()`
+  * would (the set's `==` on boxed doubles is IEEE: -0.0 == 0.0 would
+  * keep whichever came first, and NaN != NaN every NaN). Binary items are
+  * rejected: `Array[Byte]` compares by reference, so they would never
+  * dedup. Registered as `capped_item_set(item, cap)`; `cap` must be a
+  * positive literal.
   */
 case class CappedItemSet(
     child: Expression,
@@ -53,7 +59,7 @@ case class CappedItemSet(
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     // atomic only: HashSet distinctness relies on value equality, which
     // nested internal types (ArrayData/InternalRow/MapData) do not define
-    case dt @ (_: ArrayType | _: StructType | _: MapType) =>
+    case dt @ (_: ArrayType | _: StructType | _: MapType | BinaryType) =>
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName expects an orderable atomic item type, got " +
           dt.simpleString)
@@ -73,14 +79,25 @@ case class CappedItemSet(
     if (size > cap) { b.overflow = true; b.items.clear() }
   }
 
+  /** The set's representative of a non-null item: Float/Double
+    * normalized (-0.0 → 0.0, any NaN → the one shared boxed NaN, which
+    * `==` finds by reference), anything else copied out of its
+    * possibly reused row buffer (UTF8String, Decimal — the Spark
+    * Collect discipline). */
+  private def canonical(v: Any): Any = v match {
+    case d: Double =>
+      if (d.isNaN) CappedItemSet.NaNDouble else if (d == 0.0d) 0.0d else v
+    case f: Float =>
+      if (f.isNaN) CappedItemSet.NaNFloat else if (f == 0.0f) 0.0f else v
+    case other => InternalRow.copyValue(other)
+  }
+
   override def update(b: CappedItemSetBuffer,
                       input: InternalRow): CappedItemSetBuffer = {
     if (!b.overflow) {
       val v = child.eval(input)
       if (v == null) b.sawNull = true
-      // copy: atomic internal values (UTF8String, Decimal) may point
-      // into a reused row buffer — the Spark Collect discipline
-      else b.items += InternalRow.copyValue(v)
+      else b.items += canonical(v)
       capCheck(b)
     }
     b
@@ -125,7 +142,7 @@ case class CappedItemSet(
     b.sawNull = row.getBoolean(0)
     b.overflow = row.getBoolean(1)
     row.getArray(2).toObjectArray(child.dataType).foreach { v =>
-      b.items += InternalRow.copyValue(v)
+      b.items += canonical(v)
     }
     b
   }
@@ -136,4 +153,9 @@ case class CappedItemSet(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(
       newChild: Expression): CappedItemSet = copy(child = newChild)
+}
+
+object CappedItemSet {
+  private val NaNDouble: java.lang.Double = java.lang.Double.valueOf(Double.NaN)
+  private val NaNFloat: java.lang.Float = java.lang.Float.valueOf(Float.NaN)
 }

@@ -308,7 +308,10 @@ object Graph {
     * and the only other shuffle is the (a, b)-keyed count with
     * map-side partial aggregation. A NULL item counts toward the
     * basket's size (it is a distinct line) but pairs with nothing —
-    * both exactly as the distinct+window form behaved. Canonical
+    * both exactly as the distinct+window form behaved. A NULL basket
+    * KEY is no basket: its rows are filtered out before the groupBy
+    * (the pre-r21 equi-join dropped them the same way), so unrelated
+    * NULL-keyed lines never fuse into one pseudo-basket. Canonical
     * `item_a < item_b`, duplicate (basket, item) rows deduped first
     * so a re-delivered line never doubles a pair.
     */
@@ -318,6 +321,7 @@ object Graph {
       s"cooccurrence: maxBasket must be >= 2, got $maxBasket")
     val items = pairs
       .select(col(basketCol).as("b"), col(itemCol).as("i"))
+      .filter(col("b").isNotNull)
       .groupBy(col("b"))
       .agg(call_function("capped_item_set", col("i"), lit(maxBasket))
         .as("__its"))
@@ -333,10 +337,12 @@ object Graph {
 
   /** Audit twin of [[cooccurrence]]: the baskets the cap dropped, with
     * their sizes — alert when it is non-empty, raise `maxBasket`
-    * deliberately or blocklist the key. */
+    * deliberately or blocklist the key. NULL basket keys are no basket
+    * here either. */
   def cooccurrenceAudit(pairs: DataFrame, basketCol: String,
                         itemCol: String, maxBasket: Int): DataFrame =
     pairs.select(col(basketCol).as("b"), col(itemCol).as("i"))
+      .filter(col("b").isNotNull)
       .distinct()
       .groupBy(col("b").as(basketCol))
       .agg(count(lit(1)).as("n_items"))

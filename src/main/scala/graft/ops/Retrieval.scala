@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Lexical retrieval over a document corpus — BM25 ranking of corpus
   * documents against a (small) query set.
@@ -66,7 +69,7 @@ object Retrieval {
     val qTermSet = qTerms.select(col("term")).distinct()
 
     // Corpus constants from a scan-only aggregate (no explode): a 1-row
-    // DataFrame cross-joined into the score expression, never an eager
+    // DataFrame cross-joined onto the per-term df rows, never an eager
     // .first() at plan-construction time (q47's ns pattern).
     val stats = docs.agg(
       count(lit(1)).cast("double").as("n_docs"),
@@ -103,7 +106,8 @@ object Retrieval {
     val df_ = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
 
-    scoreBm25(tf, df_, qTerms, stats, topK, k1, b)
+    scoreBm25(tf, df_.crossJoin(stats), qTerms, col("n_docs"), col("avgdl"),
+        topK, k1, b)
       .select(col("query_id"), col("rnk"), col("d_id").as(docId), col("bm25"))
   }
 
@@ -112,17 +116,19 @@ object Retrieval {
     * (bm25 desc, doc asc) rank), shared by [[bm25TopK]] (per-call corpus
     * scan) and [[probePostings]] (stored-index scan) so the two paths
     * can never drift: the probe ≡ direct law in OpsSpec is a law about
-    * THIS function being fed identical (tf, df, stats) inputs.
+    * THIS function being fed identical (tf, df, corpus constant) inputs.
+    * The corpus constants `nDocs` and `avgdl` are columns: bm25TopK's
+    * come from its lazy stats aggregate (joined onto `df_`), a probe's
+    * are the stored index's literals.
     */
   private def scoreBm25(tf: DataFrame, df_ : DataFrame, qTerms: DataFrame,
-                        stats: DataFrame, topK: Int,
+                        nDocs: Column, avgdl: Column, topK: Int,
                         k1: Double, b: Double): DataFrame = {
-    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1)
+    val idf = log((nDocs - col("df") + 0.5) / (col("df") + 0.5) + 1)
     val norm = col("tf") +
-      lit(k1) * (lit(1 - b) + lit(b) * col("dlen") / col("avgdl"))
+      lit(k1) * (lit(1 - b) + lit(b) * col("dlen") / avgdl)
     val scored = tf
       .join(broadcast(df_), "term")
-      .crossJoin(broadcast(stats))
       .join(broadcast(qTerms), "term")
       .withColumn("contrib", round(idf * col("tf") * (k1 + 1) / norm, 9))
       .groupBy(col("query_id"), col("d_id"))
@@ -253,6 +259,14 @@ object Retrieval {
     * stats never costs IO. That replaces bm25TopK's corpus-wide
     * tokenize+explode+semi-join with a read of ~|query vocab| row groups.
     *
+    * On disk an index is one directory: the `postings/` parquet table
+    * and `manifest.json`, a small JSON document (kind, scheme, `n_docs`,
+    * `sum_dlen`, the postings schema) that [[save]] writes on the driver
+    * LAST and [[loadPostings]] reads on the driver, so opening an index
+    * runs no Spark job. A directory without a manifest is not an index:
+    * a save that died partway, or the older `meta/` table layout, is
+    * refused at load.
+    *
     * Corpus stats are stored EXACTLY: `n_docs` and `sum_dlen` as longs
     * (token counts are integers; the long sum is exact), so a probe's
     * `avgdl = sum_dlen / n_docs` reproduces bm25TopK's
@@ -278,19 +292,34 @@ object Retrieval {
       * rendered to the double bm25TopK's `avg` computes. */
     def avgdl: Double = sumDlen.toDouble / nDocs
 
-    /** Store as two parquet tables under `path` (`postings/`, `meta/`).
-      * Postings are range-partitioned and sorted by term so row-group
-      * stats make the probe's pushed `IN(term, …)` filter an index scan,
-      * not a table scan. */
+    /** Store under `path` as the `postings/` parquet table plus
+      * `manifest.json`. The old manifest is deleted FIRST and the new
+      * one published LAST (temp file + rename), so a save that fails in
+      * between leaves a directory [[loadPostings]] refuses, never a torn
+      * index that loads. Postings are range-partitioned and sorted by
+      * term so row-group stats make the probe's pushed `IN(term, …)`
+      * filter an index scan, not a table scan. */
     def save(path: String): Unit = {
+      val manifest = new Path(path, PostingsIndex.Manifest)
+      val fs = manifest.getFileSystem(
+        postings.sparkSession.sparkContext.hadoopConfiguration)
+      fs.delete(manifest, false)
       postings
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("d_id"))
         .write.mode("overwrite").parquet(s"$path/postings")
-      val spark = postings.sparkSession
-      import spark.implicits._
-      Seq((nDocs, sumDlen, scheme)).toDF("n_docs", "sum_dlen", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      val mapper = new ObjectMapper()
+      val doc = mapper.createObjectNode()
+        .put("kind", PostingsIndex.Kind)
+        .put("scheme", scheme)
+        .put("n_docs", nDocs)
+        .put("sum_dlen", sumDlen)
+      doc.set[JsonNode]("postings_schema", mapper.readTree(postings.schema.json))
+      val tmp = new Path(path, s"_${PostingsIndex.Manifest}.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(mapper.writeValueAsBytes(doc)) finally out.close()
+      require(fs.rename(tmp, manifest),
+        s"PostingsIndex.save: could not publish $manifest")
     }
   }
 
@@ -299,6 +328,8 @@ object Retrieval {
       * stored (term, tf, dlen) rows would stop matching what this build
       * computes for the same text. */
     val Scheme = 1
+    private[ops] val Kind = "PostingsIndex"
+    private[ops] val Manifest = "manifest.json"
   }
 
   /** Build a [[PostingsIndex]] from a corpus: one tokenize of each doc
@@ -324,33 +355,50 @@ object Retrieval {
     PostingsIndex(postings, statsRow.getLong(0), statsRow.getLong(1))
   }
 
-  /** Read a [[PostingsIndex]] written by [[PostingsIndex.save]]. Stats
-    * come from the stored meta row, never the caller; a scheme mismatch
-    * fails loudly here rather than silently mis-scoring probes built
-    * under a different tokenizer.
+  /** Read a [[PostingsIndex]] written by [[PostingsIndex.save]]. The
+    * manifest is read on the driver and its postings schema handed to
+    * the parquet reader, so loading runs no Spark job. Stats come from
+    * the manifest, never the caller; a missing manifest (an unfinished
+    * save, or the older `meta/` layout) and a scheme mismatch fail
+    * loudly here rather than silently mis-scoring probes.
     */
-  def loadPostings(spark: org.apache.spark.sql.SparkSession,
-                   path: String): PostingsIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
+  def loadPostings(spark: SparkSession, path: String): PostingsIndex = {
+    val manifest = new Path(path, PostingsIndex.Manifest)
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(manifest),
+      s"no PostingsIndex at $path: $manifest is missing — the save did " +
+        "not finish, or the directory predates the manifest layout (a " +
+        "meta/ table); rebuild the index")
+    val in = fs.open(manifest)
+    val doc = try new ObjectMapper().readTree(in.readAllBytes())
+      finally in.close()
+    val kind = doc.path("kind").asText()
+    require(kind == PostingsIndex.Kind,
+      s"$manifest describes a '$kind', not a ${PostingsIndex.Kind}")
+    val scheme = doc.get("scheme").asInt()
     require(scheme == PostingsIndex.Scheme,
       s"stored PostingsIndex at $path uses scheme $scheme but this build " +
         s"produces scheme ${PostingsIndex.Scheme} — rebuild the index (a " +
         "cross-tokenizer probe would silently mis-score)")
-    PostingsIndex(spark.read.parquet(s"$path/postings"),
-      meta.getAs[Long]("n_docs"), meta.getAs[Long]("sum_dlen"), scheme)
+    val schema = DataType.fromJson(doc.get("postings_schema").toString)
+      .asInstanceOf[StructType]
+    PostingsIndex(spark.read.schema(schema).parquet(s"$path/postings"),
+      doc.get("n_docs").asLong(), doc.get("sum_dlen").asLong(), scheme)
   }
 
   /** BM25 rank a query batch against a STORED index — the per-batch
-    * production cost: the distinct query-term set (config-bounded — a
-    * query batch is an eval set, thousands of rows, the [[bm25TopK]]
-    * contract) is collected and pushed into the postings scan as a
-    * literal `IN` filter, so on a [[PostingsIndex.save]] layout only the
-    * matching term ranges' row groups are read; df is then an aggregate
-    * of the |query vocab|-bounded surviving postings (identical to
-    * bm25TopK's — df counts docs PER TERM, and restricting by term
-    * before counting changes nothing), and the scoring tail is the
-    * SHARED [[scoreBm25]]. Result: byte-identical to
+    * production cost: the batch's (query_id, term) pairs (config-bounded
+    * — a query batch is an eval set, thousands of rows, the [[bm25TopK]]
+    * contract) are collected ONCE; their distinct terms are pushed into
+    * the postings scan as a literal `IN` filter, so on a
+    * [[PostingsIndex.save]] layout only the matching term ranges' row
+    * groups are read, and the collected rows come back as the local
+    * query-term relation of the score join (the query batch is never
+    * evaluated twice). df is an aggregate of the |query vocab|-bounded
+    * surviving postings (identical to bm25TopK's — df counts docs PER
+    * TERM, and restricting by term before counting changes nothing),
+    * the corpus constants are the index's literals, and the scoring tail
+    * is the SHARED [[scoreBm25]]. Result: byte-identical to
     * `bm25TopK(corpus, queries)` with the corpus pass replaced by an
     * indexed read.
     */
@@ -362,10 +410,13 @@ object Retrieval {
     require(topK > 0, s"topK must be positive, got $topK")
     require(k1 >= 0 && b >= 0 && b <= 1,
       s"BM25 parameters out of range: k1=$k1 b=$b")
-    val qTerms = queries.select(col(queryId).as("query_id"),
+    val qTermPlan = queries.select(col(queryId).as("query_id"),
       explode(array_distinct(TextOps.tokens(col(queryTextCol)))).as("term"))
-    val termList = qTerms.select(col("term")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val qRows = qTermPlan.collect()
+    val spark = index.postings.sparkSession
+    val qTerms = spark.createDataFrame(
+      java.util.Arrays.asList(qRows: _*), qTermPlan.schema)
+    val termList = qRows.iterator.map(_.getString(1)).distinct.toSeq
     val tf = index.postings
       .filter(col("term").isin(termList: _*))
       .select(col("term"), col("d_id"),
@@ -373,11 +424,8 @@ object Retrieval {
         col("dlen").cast("double").as("dlen"))
     val df_ = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val stats = Seq((index.nDocs.toDouble, index.avgdl))
-      .toDF("n_docs", "avgdl")
-    scoreBm25(tf, df_, qTerms, stats, topK, k1, b)
+    scoreBm25(tf, df_, qTerms, lit(index.nDocs.toDouble), lit(index.avgdl),
+        topK, k1, b)
       .select(col("query_id"), col("rnk"), col("d_id").as("doc_id"),
         col("bm25"))
   }

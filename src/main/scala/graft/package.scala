@@ -11,11 +11,51 @@ import org.apache.spark.sql.functions._
 package object graft {
 
   /** Read one of the driver's parquet fixture tables from a scale-factor
-    * directory. Plain `spark.read.parquet` → vectorized scan with filter
-    * and column pushdown.
+    * directory: a vectorized scan with filter and column pushdown, read
+    * through [[readParquet]] so a repeated call infers no schema.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema Spark inferred for the
+    * same file version, so only the first read of a version runs the
+    * schema-inference job. The cache is per session and keyed by the
+    * path, the listed files' (name, size, mtime) and the session's
+    * parquet settings (they decide the inferred types, e.g.
+    * `inferTimestampNTZ`): a rewritten file is inferred again. It holds
+    * schemas only, never data; [[clearCaches]] drops it. A path that
+    * does not list (absent, or a glob) reads plainly and fails or
+    * resolves exactly as Spark's reader does.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val settings = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val version = (files.result(), settings)
+      val cache = schemaCache.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+      val schema = cache.compute(path, (_, cached) =>
+        if (cached != null && cached._1 == version) cached
+        else (version, spark.read.parquet(path).schema))._2
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String,
+      ((Seq[(String, Long, Long)], Map[String, String]),
+        org.apache.spark.sql.types.StructType)]]
 
   /** The `events` table's `ts` column has surfaced three different ways as
     * the fixture generator evolved: epoch-nanos LongType (TIMESTAMP(NANOS)
@@ -68,11 +108,13 @@ package object graft {
       spark.conf.get("spark.sql.session.timeZone"))
 
   /** Release everything graft memoizes against `spark`: the materialized
-    * near-dup pair set (persisted RDD blocks) and the SQL-door Engine.
+    * near-dup pair set (persisted RDD blocks), the SQL-door Engine and
+    * the [[readParquet]] schemas.
     * Call at teardown (Bench/Verify do) or between corpora on a
     * long-lived session; queries re-derive lazily on next use.
     */
   def clearCaches(spark: SparkSession): Unit = {
+    schemaCache.remove(spark)
     queries.PipelineQueries.clearCache(spark)
     queries.AnalyticQueries.clearEngine(spark)
   }

@@ -1930,6 +1930,58 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("scheme"))
   }
 
+  test("PostingsIndex: a save that fails partway leaves a directory load refuses") {
+    val idx = ops.Retrieval.fitPostings(postingsCorpus)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-postings-torn").toString
+    idx.save(dir)
+    assert(ops.Retrieval.loadPostings(spark, dir).nDocs === idx.nDocs)
+    // the new postings expression throws mid-write, over a good index
+    val boom = udf((tf: Long) =>
+      if (tf > 0) throw new IllegalStateException("planted failure") else tf)
+    intercept[Exception] {
+      idx.copy(postings = idx.postings.withColumn("tf", boom(col("tf"))))
+        .save(dir)
+    }
+    val e = intercept[IllegalArgumentException] {
+      ops.Retrieval.loadPostings(spark, dir)
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("manifest"),
+      e.getMessage)
+  }
+
+  test("PostingsIndex: postings without a manifest and the old meta/ layout are refused") {
+    val idx = ops.Retrieval.fitPostings(postingsCorpus)
+    val noManifest = java.nio.file.Files
+      .createTempDirectory("graft-postings-bare").toString
+    idx.save(noManifest)
+    assert(new java.io.File(noManifest, "manifest.json").delete())
+    // the layout older builds wrote: postings/ next to a meta/ table
+    val oldLayout = java.nio.file.Files
+      .createTempDirectory("graft-postings-meta").toString
+    idx.postings.write.parquet(s"$oldLayout/postings")
+    Seq((idx.nDocs, idx.sumDlen, ops.Retrieval.PostingsIndex.Scheme))
+      .toDF("n_docs", "sum_dlen", "scheme")
+      .write.parquet(s"$oldLayout/meta")
+    for (dir <- Seq(noManifest, oldLayout)) {
+      val e = intercept[IllegalArgumentException] {
+        ops.Retrieval.loadPostings(spark, dir)
+      }
+      assert(e.getMessage.contains(dir), e.getMessage)
+    }
+  }
+
+  test("loadPostings starts no Spark job") {
+    val idx = ops.Retrieval.fitPostings(postingsCorpus)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-postings-jobs").toString
+    idx.save(dir)
+    val (loaded, jobs) = jobsStartedBy(ops.Retrieval.loadPostings(spark, dir))
+    assert(jobs === 0, "the manifest is read on the driver")
+    assert(loaded.postings.as[(String, Long, Long, Long)].collect().toSet
+      === idx.postings.as[(String, Long, Long, Long)].collect().toSet)
+  }
+
   test("extendPostings ≡ refit on the union; duplicate batch ids are loud") {
     val base = postingsCorpus.filter($"doc_id" <= 4)
     val batch = postingsCorpus.filter($"doc_id" > 4)
@@ -4053,6 +4105,45 @@ class OpsSpec extends SparkSpec {
     // every basket {x<b>, y<b>, z<b>} (x dup deduped) gives its 3 pairs
     assert(coS.length === 120 && coS.forall(_._3 == 1L))
     assert(coS.contains(("x7", "y7", 1L)) && coS.contains(("y7", "z7", 1L)))
+  }
+
+  test("capped_item_set: -0.0 and 0.0 are one item, every NaN is one item") {
+    import graft.ops.Graph
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    val rows = Seq(
+      (1L, -0.0), (1L, 0.0), (1L, 2.0),              // {0.0, 2.0}
+      (2L, Double.NaN), (2L, otherNaN), (2L, 1.0))   // {1.0, NaN}
+      .toDF("b", "d").coalesce(1)
+    val sets = rows.groupBy("b")
+      .agg(call_function("capped_item_set", col("d"), lit(2)).as("s"))
+      .orderBy("b").as[(Long, Seq[Double])].collect()
+    // toString tells -0.0 from 0.0 and prints NaN comparably
+    assert(sets.map(_._2.map(_.toString)).toSeq ===
+      Seq(Seq("0.0", "2.0"), Seq("1.0", "NaN")))
+    val co = Graph.cooccurrence(rows, "b", "d", maxBasket = 2)
+      .as[(Double, Double, Long)].collect().map(_.toString).sorted.toSeq
+    assert(co === Seq("(0.0,2.0,1)", "(1.0,NaN,1)"))
+  }
+
+  test("capped_item_set: binary items are refused") {
+    val bin = Seq((1L, Array[Byte](1, 2))).toDF("b", "i")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      bin.groupBy("b").agg(call_function("capped_item_set", col("i"), lit(3)))
+    }
+    assert(e.getMessage.contains("capped_item_set") &&
+      e.getMessage.contains("binary"), e.getMessage)
+  }
+
+  test("cooccurrence: NULL-keyed rows form no basket") {
+    import graft.ops.Graph
+    val rows = Seq(
+      (Some(1L), 10L), (Some(1L), 20L),
+      (None, 10L), (None, 20L), (None, 30L))  // unrelated lines, no basket
+      .toDF("b", "i")
+    val co = Graph.cooccurrence(rows, "b", "i", maxBasket = 3)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(co === Seq((10L, 20L, 1L)))
+    assert(Graph.cooccurrenceAudit(rows, "b", "i", maxBasket = 2).count() === 0L)
   }
 
   test("quantileNormalize: pooled distribution law, deterministic ties, binned sibling within one bin width") {

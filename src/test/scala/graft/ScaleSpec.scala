@@ -271,6 +271,29 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
+  test("table: one schema inference per file version; clearCaches forgets it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schemas").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)
+      .write.parquet(s"$dir/t.parquet")
+    graft.clearCaches(spark)
+    val (first, firstJobs) = jobsStartedBy(table(spark, dir, "t"))
+    assert(firstJobs >= 1, "the first read of a file version infers its schema")
+    val (again, againJobs) = jobsStartedBy(table(spark, dir, "t"))
+    assert(againJobs === 0, "an unchanged file must not be inferred again")
+    assert(again.schema === first.schema)
+    assert(again.as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
+    // a rewrite (new size and mtime, here also a new column) re-infers
+    Seq((3L, "ccc", 0.5)).toDF("id", "s", "x").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (rewritten, rewriteJobs) = jobsStartedBy(table(spark, dir, "t"))
+    assert(rewriteJobs >= 1, "a rewritten file must be inferred again")
+    assert(rewritten.as[(Long, String, Double)].collect() === Array((3L, "ccc", 0.5)))
+    assert(jobsStartedBy(table(spark, dir, "t"))._2 === 0)
+    graft.clearCaches(spark)
+    assert(jobsStartedBy(table(spark, dir, "t"))._2 >= 1,
+      "clearCaches must empty the schema cache")
+  }
+
   test("partitioned layout prunes partitions at plan time") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
     table(spark, sfDir, "events")
