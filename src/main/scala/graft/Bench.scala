@@ -35,12 +35,26 @@ import java.nio.file.{Files, Paths}
   *    median map only, error messages truncated) sized to fit the
   *    driver's 2000-char stdout tail window, so BENCH_r{N}.json's
   *    `parsed` field carries every per-query number standalone instead
-  *    of a truncated string (r10–r13 archived `parsed: null`).
+  *    of a truncated string (r10–r13 archived `parsed: null`);
+  *  - the file also says what ran the bench (`cpus` of the machine,
+  *    `default_parallelism` of the session, `codegen_cache_max_entries`)
+  *    and, per query, how many classes its timed samples compiled and
+  *    how long that took (`codegen_compiles`, `codegen_ms`: sums over the
+  *    archived attempt's samples; `warmup_codegen_*` for the warmup pass).
+  *    With generated code compiled once per JVM, the timed samples of a
+  *    query compile next to nothing; a large count means compile work is
+  *    back on the operation path.
   */
 object Bench {
 
   private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** JVM-wide totals: classes compiled (codegen-cache misses) and the
+    * nanoseconds spent compiling them. */
+  private def codegen(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -59,6 +73,7 @@ object Bench {
     // Janino compile / JIT / ICU-init costs (q19's string functions alone
     // cost ~10 s on first execution) land outside the timed region — the
     // timed pass then measures steady-state plan execution.
+    val warmup0 = codegen()
     benchQueries.foreach { case (name, fn) =>
       // Failures don't abort the warmup (the timed pass re-raises and
       // flags the query), but they shouldn't be SILENT either — a
@@ -70,6 +85,7 @@ object Bench {
             s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
       }
     }
+    val warmup1 = codegen()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Polluted-run gate (round-9 verdict #2): BASELINE.md's protocol says
@@ -83,7 +99,8 @@ object Bench {
     // ships (the driver needs a record) but carries `polluted: true` and
     // `attempts` so no reader can mistake it for clean evidence.
     case class Attempt(results: Seq[(String, Double, Double, Double, Boolean)],
-                       errors: Seq[String], noise: Double)
+                       errors: Seq[String], noise: Double,
+                       codegen: collection.Map[String, (Long, Long)])
     def timedPass(): Attempt = {
       val errors = scala.collection.mutable.ListBuffer.empty[String]
       // The `reps` samples of a query are taken on INTERLEAVED full
@@ -100,7 +117,10 @@ object Bench {
       val broken = scala.collection.mutable.Set.empty[String]
       val times = scala.collection.mutable.LinkedHashMap.empty[
         String, scala.collection.mutable.ArrayBuffer[Double]]
+      val compiled = scala.collection.mutable.Map.empty[String, (Long, Long)]
+        .withDefaultValue((0L, 0L))
       for (_ <- 0 until reps; (name, fn) <- benchQueries if !broken(name)) {
+        val (c0, ns0) = codegen()
         val t0 = System.nanoTime()
         try {
           materialize(fn(spark, sfDir))
@@ -113,6 +133,10 @@ object Bench {
           case e: Throwable =>
             errors += s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
             broken += name
+        } finally {
+          val (c1, ns1) = codegen()
+          val (c, ns) = compiled(name)
+          compiled(name) = (c + c1 - c0, ns + ns1 - ns0)
         }
       }
       val results = benchQueries.map { case (name, _) =>
@@ -132,7 +156,8 @@ object Bench {
       // pushes it well past 1.
       val total = results.collect { case (_, med, _, _, true) => med }.sum
       val spread = results.collect { case (_, _, min, max, true) => max - min }.sum
-      Attempt(results, errors.toList, if (total > 0) spread / total else 0.0)
+      Attempt(results, errors.toList, if (total > 0) spread / total else 0.0,
+        compiled)
     }
     val maxAttempts =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt.max(1)
@@ -161,6 +186,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val qsMin = results.map { case (k, _, min, _, ok) =>
       "\"" + k + "\":" + (if (ok) f"$min%.3f" else "-1")
+    }.mkString("{", ",", "}")
+    val qsCompiles = results.map { case (k, _, _, _, _) =>
+      "\"" + k + "\":" + best.codegen(k)._1
+    }.mkString("{", ",", "}")
+    val qsCompileMs = results.map { case (k, _, _, _, _) =>
+      "\"" + k + "\":" + f"${best.codegen(k)._2 / 1e6}%.1f"
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, med, _, _, true) => med }.sum
     val minTotal = results.collect { case (_, _, min, _, true) => min }.sum
@@ -192,8 +223,16 @@ object Bench {
     val sfJson = sfNum.getOrElse(Verify.jsonStr(sfDir))
     val header =
       f""""metric":"total","value":$total%.3f,"unit":"sec","min_total":$minTotal%.3f,"noise":$noise%.2f,"polluted":$polluted,"failed":$failed,"attempts":$attempt,"sf":$sfJson"""
+    val context =
+      s""""cpus":${Runtime.getRuntime.availableProcessors},""" +
+        s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
+        s""""codegen_cache_max_entries":""" +
+        spark.conf.get("spark.sql.codegen.cache.maxEntries") +
+        s""","warmup_codegen_compiles":${warmup1._1 - warmup0._1},""" +
+        f""""warmup_codegen_ms":${(warmup1._2 - warmup0._2) / 1e6}%.1f"""
     val line =
-      s"""{$header,"sf_dir":${Verify.jsonStr(sfDir)},"queries":$qs,"queries_min":$qsMin,"errors":$errJson}"""
+      s"""{$header,$context,"sf_dir":${Verify.jsonStr(sfDir)},"queries":$qs,"queries_min":$qsMin,""" +
+        s""""codegen_compiles":$qsCompiles,"codegen_ms":$qsCompileMs,"errors":$errJson}"""
     // compact stdout twin: qNN keys (the unique name prefix), medians
     // only, errors clipped — full fidelity lives in the file
     val qsShort = results.map { case (k, med, _, _, ok) =>

@@ -27,13 +27,19 @@ object GraftSession {
       // they're callable from both the Column API and SQL text.
       .withExtensions { ext =>
         // The reference optimizer's rewrites as injected optimizer rules
-        // (SURVEY §4.1). Catalyst subsumes them, so on already-optimized
-        // plans they are no-ops — RaParitySpec pins that fixed-point
-        // property; the injection demonstrates the SparkSessionExtensions
-        // wiring the thesis pipeline would use. R1 (break-up) is NOT
-        // injected: it is a one-shot stepping stone, not fixed-point
-        // stable (it would alternate with merge forever in a fixedPoint
-        // batch — the reference likewise applies it exactly once).
+        // (SURVEY §4.1). Catalyst subsumes them: they run inside its
+        // fixed-point operator batches and reach the plan Catalyst reaches
+        // alone. Over a full contract pass they fire on three plans, each
+        // time a step ahead of the stock rule doing the same rewrite: R3 on
+        // q63 and q74 (CombineFilters' merge), R4 on q87 (it labels the
+        // conditioned Cross join Inner; Catalyst attaches the condition
+        // and keeps the label). RaParitySpec pins those firings and the
+        // unchanged fixed point; the injection demonstrates the
+        // SparkSessionExtensions wiring the thesis pipeline would use.
+        // R1 (break-up) is NOT injected: it is a one-shot stepping stone,
+        // not fixed-point stable (it would alternate with merge forever in
+        // a fixedPoint batch — the reference likewise applies it exactly
+        // once).
         Seq(graft.rules.RaRules.PushDownSelections,
           graft.rules.RaRules.MergeSelections,
           graft.rules.RaRules.IntroduceJoins)
@@ -428,6 +434,28 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // Generated code compiles once per JVM, not once per operation.
+      // Spark caches compiled whole-stage/projection classes by (class
+      // loader, generated source) in a cache of 100 entries; graft's
+      // working set is far larger. Census, all 298 contract queries run
+      // twice in one JVM (sf0.01, 4 cores, noop sink): with 100 entries
+      // the second pass recompiled 6,184 classes against 6,435 in the
+      // first; with 8192 the first pass compiled 4,094 distinct classes
+      // and the second 260. Bench at sf0.1: 6,248 compiles per timed
+      // pass before, 120 after; total 247 s -> 164 s. 8192 is the next
+      // power of two above twice that working set; the full contract
+      // holds about 30 MB more metaspace at this size. Static: only a
+      // builder setting reaches it.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // Each streaming query runs on a cloned session; with artifact
+      // isolation on, the clone gets its own executor class loader, the
+      // loader is part of the codegen cache key, and every AvailableNow
+      // drain recompiled all its classes whatever the cache size (25 for
+      // the event-time sessionizer, 12 for the clean/scrub pipeline, whose
+      // fused stage is some 2,700 lines). graft adds no session artifacts
+      // (jars, classes, files), so isolation protects nothing here; off,
+      // a second drain of the same stream compiles none.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // keep saveAsTable (bucketed-table tests/demos) out of the repo dir
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")

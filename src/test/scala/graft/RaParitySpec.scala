@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.{Cross => CrossType, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.functions._
 import graft.rules.RaRules
 
@@ -140,5 +141,58 @@ class RaParitySpec extends SparkSpec {
     // canonicalized comparison: expression-id and conjunct-order neutral
     assert(reApplied.canonicalized == base.canonicalized,
       s"our pipeline must be a no-op on Catalyst's fixed point:\n$base\nvs\n$reApplied")
+  }
+
+  // ── the injected rules on the contract ─────────────────────────────────
+
+  private val injected = Seq(RaRules.PushDownSelections,
+    RaRules.MergeSelections, RaRules.IntroduceJoins).map(_.ruleName)
+  private val MeterLine = """^(\S+)\s+\d+ / \d+\s+(\d+) / \d+\s*$""".r
+
+  /** Effective runs of the injected rules while `body` runs, from
+    * Catalyst's rule metering. */
+  private def firings(body: => Unit): Map[String, Long] = {
+    def meter() = RuleExecutor.dumpTimeSpent().split("\n").iterator.collect {
+      case MeterLine(name, effective) if injected.contains(name) =>
+        name -> effective.toLong
+    }.toMap
+    val before = meter()
+    body
+    meter().map { case (k, n) => k -> (n - before.getOrElse(k, 0L)) }
+      .filter(_._2 > 0)
+  }
+
+  test("injected rules fire on three contract plans and leave Catalyst's fixed point unchanged") {
+    // Over a full contract pass these are the only firings. Inside
+    // Catalyst's fixed-point batches an injected rule can run before the
+    // stock rule that does the same rewrite in the same iteration
+    // (CombineFilters for R3; PushPredicateThroughJoin, which attaches
+    // the condition but keeps the Cross label, for R4). The plans reached
+    // without them differ only in that label.
+    SparkSession.setActiveSession(spark)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    def crossAsInner(p: LogicalPlan) = p transform {
+      case j @ Join(_, _, CrossType, Some(_), _) => j.copy(joinType = Inner)
+    }
+    for ((q, rule) <- Seq(
+        "q63_clean_pipeline" -> RaRules.MergeSelections,
+        "q74_bigram_pmi" -> RaRules.MergeSelections,
+        "q87_semantic_dedup" -> RaRules.IntroduceJoins)) {
+      val analyzed = SparkEntry.queries(q)(spark, sfDir).queryExecution.analyzed
+      var withRules: LogicalPlan = null
+      val fired = firings {
+        withRules = spark.sessionState.optimizer.execute(analyzed)
+      }
+      assert(fired.keySet === Set(rule.ruleName), s"$q: $fired")
+      val catalystOnly =
+        try {
+          spark.conf.set(excluded, injected.mkString(","))
+          spark.sessionState.optimizer.execute(analyzed)
+        } finally spark.conf.unset(excluded)
+      assert(crossAsInner(withRules).canonicalized ==
+          crossAsInner(catalystOnly).canonicalized,
+        s"$q: the injected rules changed the optimized plan:\n$withRules\n" +
+          s"vs Catalyst alone:\n$catalystOnly")
+    }
   }
 }

@@ -53,4 +53,17 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Run `body` and count the classes Spark compiles for it: each
+    * generated class that misses the codegen cache is compiled once and
+    * counted once. The counter is JVM-wide, so `body` must wait for the
+    * work it starts (a collect, a terminated stream).
+    */
+  def classesCompiledBy[T](body: => T): (T, Long) = {
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val out = body
+    (out, compiles.getCount - before)
+  }
 }
