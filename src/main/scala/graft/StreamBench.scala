@@ -156,7 +156,7 @@ object StreamBench {
         val base = spark.range(nBase.toLong)
           .select(col("id").as("doc_id"), textOf(col("id")).as("text"))
         // The production round trip, not an in-session shortcut: build →
-        // save (three parquet tables + meta) → loadIndex (re-checks the
+        // save (two relations + manifest) → loadIndex (re-checks the
         // hash scheme) → persist. The stream below probes the STORED
         // index — exactly what a cluster restarting between compaction
         // and ingest would do.

@@ -100,31 +100,22 @@ object Classify {
     NbModel(weights, bias, defaultW, alpha)
   }
 
-  /** Persist a fitted [[NbModel]] (+ tokenizer-scheme / α / scalar meta
-    * — the [[TextOps.saveImportanceModel]] discipline: a model hashed
-    * under one tokenizer and scored under another silently mis-scores
-    * every doc, so the mismatch fails loudly at load).
+  /** Persist a fitted [[NbModel]] through [[graft.Store]] (weights, the
+    * scalars, and [[TextOps.TokenizerScheme]] as the scheme: a model
+    * hashed under one tokenizer and scored under another silently
+    * mis-scores every doc, so the mismatch fails loudly at load).
     */
-  def saveNbModel(m: NbModel, path: String): Unit = {
-    m.weights.write.mode("overwrite").parquet(s"$path/weights")
-    val spark = m.weights.sparkSession
-    import spark.implicits._
-    Seq((TextOps.TokenizerScheme, m.alpha, m.bias, m.defaultW))
-      .toDF("tokenizer_scheme", "alpha", "bias", "default_w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveNbModel(m: NbModel, path: String): Unit =
+    graft.Store.save(path, "NbModel", TextOps.TokenizerScheme,
+      Seq("alpha" -> m.alpha, "bias" -> m.bias, "default_w" -> m.defaultW),
+      "weights" -> m.weights)
 
   /** Read a stored [[NbModel]]; a stale tokenizer scheme fails loudly
-    * here (the [[TextOps.loadTermFreqs]] contract). */
+    * here. */
   def loadNbModel(spark: SparkSession, path: String): NbModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("tokenizer_scheme")
-    require(scheme == TextOps.TokenizerScheme,
-      s"stored classifier at $path uses tokenizer scheme $scheme but " +
-        s"this build produces ${TextOps.TokenizerScheme} — refit it")
-    NbModel(spark.read.parquet(s"$path/weights"),
-      meta.getAs[Double]("bias"), meta.getAs[Double]("default_w"),
-      meta.getAs[Double]("alpha"))
+    val l = graft.Store.load(spark, path, "NbModel", TextOps.TokenizerScheme)
+    NbModel(l("weights"), l.double("bias"), l.double("default_w"),
+      l.double("alpha"))
   }
 
   /** Score a document batch under a fitted [[NbModel]]: per doc the

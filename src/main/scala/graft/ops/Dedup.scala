@@ -228,21 +228,17 @@ object Dedup {
     * every stored artifact here; a re-ingested doc would double-count
     * its carriership).
     *
-    * `sep` + the hash rides the meta as the derivation scheme — an
-    * index fitted at paragraph grain probed at line grain would
-    * silently miss everything, so the mismatch fails loudly instead.
+    * `sep` rides the [[graft.Store]] manifest and the scheme pins the
+    * hash — an index fitted at paragraph grain probed at line grain
+    * would silently miss everything, so the mismatch fails loudly.
     */
   final case class BoilerplateIndex(lineDf: DataFrame, sep: String,
                                     scheme: Int = BoilerplateIndex.Scheme) {
-    def save(path: String): Unit = {
-      lineDf.repartitionByRange(col("group"), col("uh"))
-        .sortWithinPartitions(col("group"), col("uh"))
-        .write.mode("overwrite").parquet(s"$path/line_df")
-      val spark = lineDf.sparkSession
-      import spark.implicits._
-      Seq((sep, scheme)).toDF("sep", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    /** Store through [[graft.Store]], range-sorted by (group, uh). */
+    def save(path: String): Unit =
+      graft.Store.save(path, "BoilerplateIndex", scheme, Seq("sep" -> sep),
+        "line_df" -> lineDf.repartitionByRange(col("group"), col("uh"))
+          .sortWithinPartitions(col("group"), col("uh")))
   }
 
   object BoilerplateIndex {
@@ -271,13 +267,9 @@ object Dedup {
 
   def loadBoilerplateIndex(spark: SparkSession,
                            path: String): BoilerplateIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
-    require(scheme == BoilerplateIndex.Scheme,
-      s"stored boilerplate index uses derivation scheme $scheme; this " +
-        s"build computes scheme ${BoilerplateIndex.Scheme} — refit")
-    BoilerplateIndex(spark.read.parquet(s"$path/line_df"),
-      meta.getAs[String]("sep"), scheme)
+    val l = graft.Store.load(spark, path, "BoilerplateIndex",
+      BoilerplateIndex.Scheme)
+    BoilerplateIndex(l("line_df"), l.string("sep"))
   }
 
   /** Fold an ingest batch's carriers in: the batch's own histogram,
@@ -524,11 +516,11 @@ object Dedup {
     * ~tokens-sized but payload-free); [[SpanIndex.save]] range-sorts by
     * fp so the parquet layout delta-compresses and the probe's semi-join
     * build side (the batch occurrence set at realistic batch sizes)
-    * streams against ordered runs. `window` rides the meta: windows of a
-    * different width hash to unrelated fingerprints, so a probe at the
-    * wrong width would silently find nothing — [[loadSpanIndex]] returns
-    * the stored width and [[crossRepeatedSpans]] always uses the
-    * index's own. SCHEME pins the tokenizer + both polynomial levels
+    * streams against ordered runs. `window` rides the [[graft.Store]]
+    * manifest: windows of a different width hash to unrelated
+    * fingerprints, so a probe at the wrong width would silently find
+    * nothing — [[loadSpanIndex]] returns the stored width and
+    * [[crossRepeatedSpans]] always uses the index's own. SCHEME pins the tokenizer + both polynomial levels
     * ([[graft.expr.RollingFingerprints]]); a mismatch is loud at load.
     *
     * Lifecycle: [[fitSpanIndex]] → [[SpanIndex.save]] →
@@ -540,14 +532,9 @@ object Dedup {
     */
   final case class SpanIndex(fps: DataFrame, window: Int,
                              scheme: Int = SpanIndex.Scheme) {
-    def save(path: String): Unit = {
-      fps.repartitionByRange(col("fp")).sortWithinPartitions(col("fp"))
-        .write.mode("overwrite").parquet(s"$path/fps")
-      val spark = fps.sparkSession
-      import spark.implicits._
-      Seq((window, scheme)).toDF("window", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "SpanIndex", scheme, Seq("window" -> window),
+        "fps" -> fps.repartitionByRange(col("fp")).sortWithinPartitions(col("fp")))
   }
 
   object SpanIndex {
@@ -567,25 +554,19 @@ object Dedup {
       .select(col("fp")).distinct(), window)
   }
 
-  /** Read a [[SpanIndex]] written by [[SpanIndex.save]]; width comes
-    * from the stored meta, never the caller, and a scheme mismatch is
-    * loud (a cross-scheme probe would silently flag nothing). */
+  /** Read a [[SpanIndex]] written by [[SpanIndex.save]] through
+    * [[graft.Store.load]]; width comes from the manifest, never the
+    * caller. */
   def loadSpanIndex(spark: SparkSession, path: String): SpanIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
-    require(scheme == SpanIndex.Scheme,
-      s"stored SpanIndex at $path uses scheme $scheme but this build " +
-        s"produces scheme ${SpanIndex.Scheme} — rebuild the index (a " +
-        "cross-scheme probe would silently match nothing)")
-    SpanIndex(spark.read.parquet(s"$path/fps"),
-      meta.getAs[Int]("window"), scheme)
+    val l = graft.Store.load(spark, path, "SpanIndex", SpanIndex.Scheme)
+    SpanIndex(l("fps"), l.int("window"))
   }
 
   /** Fold an ADMITTED batch's window fingerprints into the index —
     * batch-proportional (one batch rolling scan + batch-distinct); the
     * union needs no global re-distinct for correctness (the probe is a
     * semi-join), only for storage compaction, which [[SpanIndex.save]]'s
-    * rewrite is the natural place for. */
+    * rewrite (to a new path) is the natural place for. */
   def extendSpanIndex(index: SpanIndex, admitted: DataFrame,
                       idCol: String, textCol: String): SpanIndex = {
     require(index.scheme == SpanIndex.Scheme,
@@ -812,22 +793,15 @@ object Dedup {
     def persist(): CorpusIndex = { bands.persist(); shingles.persist(); this }
     def unpersist(): Unit = { bands.unpersist(); shingles.unpersist() }
 
-    /** Store the index as three parquet tables under `path`
-      * (`bands/`, `shingles/`, `meta/`) — the cross-process form of the
-      * "computed once, stored, refreshed on compaction" artifact the
-      * class doc promises. `meta` is one row carrying (shingle_n, k,
-      * n_bands, hash_scheme) so a reader CANNOT reconstruct the index
-      * with mismatched parameters; [[Dedup.loadIndex]] is the reader.
+    /** Store the index through [[graft.Store]] (`bands/`, `shingles/`,
+      * the hash parameters in the manifest) — the cross-process form of
+      * the "computed once, stored, refreshed on compaction" artifact the
+      * class doc promises; [[Dedup.loadIndex]] is the reader.
       */
-    def save(path: String): Unit = {
-      bands.write.mode("overwrite").parquet(s"$path/bands")
-      shingles.write.mode("overwrite").parquet(s"$path/shingles")
-      val spark = bands.sparkSession
-      import spark.implicits._
-      Seq((shingleN, k, nBands, hashScheme))
-        .toDF("shingle_n", "k", "n_bands", "hash_scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "CorpusIndex", hashScheme,
+        Seq("shingle_n" -> shingleN, "k" -> k, "n_bands" -> nBands),
+        "bands" -> bands, "shingles" -> shingles)
 
     /** Store the index as BUCKETED tables (`<name>_bands` bucketed+sorted
       * on the (band, band_hash) probe key, `<name>_shingles` on base_id,
@@ -907,7 +881,8 @@ object Dedup {
       * drop (as a rebuild would drop them), buckets merely thinned
       * keep their surviving members. The tombstone IS Spark laziness —
       * a remove costs nothing now, probes pay the filtered plan, and
-      * [[save]] materializes the shrink (merge-time compaction).
+      * [[save]] to a new path materializes the shrink (merge-time
+      * compaction; [[graft.Store]] refuses a save over its own input).
       *
       * OVERFLOWED buckets stay tombstoned: their membership was
       * discarded at cap time, so "would it still overflow without the
@@ -950,30 +925,15 @@ object Dedup {
     val HashScheme = 2
   }
 
-  /** Read a [[CorpusIndex]] written by [[CorpusIndex.save]]. Parameters
-    * come from the stored meta row, never the caller; a hash-scheme
-    * mismatch (index written by an older/newer build) fails loudly here
-    * rather than silently flagging zero duplicates at probe time.
+  /** Read a [[CorpusIndex]] written by [[CorpusIndex.save]] through
+    * [[graft.Store.load]]. Parameters come from the manifest, never the
+    * caller; a hash-scheme mismatch fails loudly here rather than
+    * silently flagging zero duplicates at probe time.
     */
   def loadIndex(spark: SparkSession, path: String): CorpusIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("hash_scheme")
-    require(scheme == CorpusIndex.HashScheme,
-      s"stored CorpusIndex at $path uses hash scheme $scheme but this " +
-        s"build produces scheme ${CorpusIndex.HashScheme} — rebuild the " +
-        "index (a cross-scheme probe would silently match nothing)")
-    val bands = spark.read.parquet(s"$path/bands")
-    // pre-tombstone indexes (r9 and earlier) lack the overflow column;
-    // their tombstones were already irrecoverably dropped at build time,
-    // so the only honest path is a rebuild
-    require(bands.columns.contains("overflow"),
-      s"stored CorpusIndex at $path predates persisted tombstones " +
-        "(no `overflow` column) — rebuild the index")
-    CorpusIndex(
-      bands,
-      spark.read.parquet(s"$path/shingles"),
-      meta.getAs[Int]("shingle_n"), meta.getAs[Int]("k"),
-      meta.getAs[Int]("n_bands"), scheme)
+    val l = graft.Store.load(spark, path, "CorpusIndex", CorpusIndex.HashScheme)
+    CorpusIndex(l("bands"), l("shingles"),
+      l.int("shingle_n"), l.int("k"), l.int("n_bands"))
   }
 
   /** Read a [[CorpusIndex]] written by [[CorpusIndex.saveBucketed]]:
@@ -982,8 +942,10 @@ object Dedup {
     * sort (ScaleSpec pins the plan shape) — and `.persist()` PRESERVES
     * that layout (the cached scan keeps the bucketed output
     * partitioning), so a cache-resident index probes with two fewer
-    * per-batch shuffles than the plain stored form. Same loud
-    * hash-scheme and tombstone-layout checks as [[loadIndex]].
+    * per-batch shuffles than the plain stored form. The hash scheme is
+    * checked by [[graft.Store.requireScheme]], as in [[loadIndex]]; a
+    * shared metastore can still hold tables from before persisted
+    * tombstones, so a bands table without `overflow` is refused too.
     *
     * Durability caveat: bucket metadata lives in the CATALOG. On a
     * cluster with a shared metastore the bucketed form is durable like
@@ -995,11 +957,12 @@ object Dedup {
   def loadIndexBucketed(spark: SparkSession, name: String): CorpusIndex = {
     val meta = spark.table(s"${name}_meta").head()
     val scheme = meta.getAs[Int]("hash_scheme")
-    require(scheme == CorpusIndex.HashScheme,
-      s"stored CorpusIndex $name uses hash scheme $scheme but this " +
-        s"build produces scheme ${CorpusIndex.HashScheme} — rebuild the " +
-        "index (a cross-scheme probe would silently match nothing)")
+    graft.Store.requireScheme(s"stored CorpusIndex $name", scheme,
+      CorpusIndex.HashScheme)
     val bands = spark.table(s"${name}_bands")
+    // pre-tombstone tables (r9 and earlier) lack the overflow column;
+    // their tombstones were already irrecoverably dropped at build time,
+    // so the only honest path is a rebuild
     require(bands.columns.contains("overflow"),
       s"stored CorpusIndex $name predates persisted tombstones " +
         "(no `overflow` column) — rebuild the index")
@@ -1912,24 +1875,19 @@ object Dedup {
     * n − ⌈t·n⌉ + 1, which SHRINKS as t grows, so any probe at
     * `t' ≥ t` finds its (shorter) required prefix inside the stored
     * one — [[crossJaccardJoin]] accepts `t' ≥ t` and rejects lower
-    * thresholds loudly. `meta` pins the prefix scheme;
-    * [[Dedup.loadJaccardIndex]] rejects a mismatched build rather
-    * than silently matching nothing.
+    * thresholds loudly. The [[graft.Store]] manifest pins the prefix
+    * scheme; [[Dedup.loadJaccardIndex]] rejects a mismatched build
+    * rather than silently matching nothing.
     */
   final case class JaccardIndex(tokens: DataFrame, prefixes: DataFrame,
                                 postings: DataFrame, dfTable: DataFrame,
                                 thresholdBp: Long,
                                 scheme: Int = JaccardIndex.Scheme) {
-    def save(path: String): Unit = {
-      tokens.write.mode("overwrite").parquet(s"$path/tokens")
-      prefixes.write.mode("overwrite").parquet(s"$path/prefixes")
-      postings.write.mode("overwrite").parquet(s"$path/postings")
-      dfTable.write.mode("overwrite").parquet(s"$path/df")
-      val spark = tokens.sparkSession
-      import spark.implicits._
-      Seq((thresholdBp, scheme)).toDF("threshold_bp", "prefix_scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "JaccardIndex", scheme,
+        Seq("threshold_bp" -> thresholdBp),
+        "tokens" -> tokens, "prefixes" -> prefixes, "postings" -> postings,
+        "df" -> dfTable)
 
     /** Fold an admitted batch in: the batch's prefixes computed under
       * the PINNED ordering union the stored prefix postings, its full
@@ -1986,8 +1944,9 @@ object Dedup {
       * anti-join the retracted ids. The tombstone IS Spark laziness:
       * a remove costs NOTHING now (plan composition), every later
       * probe pays one id anti-join against the retraction set, and
-      * [[save]] — which materializes the filtered relations — is the
-      * merge-time compaction that makes the shrink physical. The
+      * [[save]] to a new path — which materializes the filtered
+      * relations — is the merge-time compaction that makes the shrink
+      * physical ([[graft.Store]] refuses a save over its own input). The
       * pinned df ordering deliberately does NOT move (same reason
       * extend doesn't move it: any FIXED order is complete; staleness
       * costs pruning only), so door RESULTS over a removed index equal
@@ -2042,23 +2001,14 @@ object Dedup {
       freq, thresholdBp)
   }
 
-  /** Read a [[JaccardIndex]] written by [[JaccardIndex.save]].
-    * Parameters come from the stored meta row, never the caller; a
-    * prefix-scheme mismatch fails loudly here rather than silently
-    * finding zero duplicates at probe time. */
+  /** Read a [[JaccardIndex]] written by [[JaccardIndex.save]] through
+    * [[graft.Store.load]]. The threshold comes from the manifest, never
+    * the caller; a prefix-scheme mismatch fails loudly here rather than
+    * silently finding zero duplicates at probe time. */
   def loadJaccardIndex(spark: SparkSession, path: String): JaccardIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("prefix_scheme")
-    require(scheme == JaccardIndex.Scheme,
-      s"stored JaccardIndex at $path uses prefix scheme $scheme but " +
-        s"this build produces ${JaccardIndex.Scheme} — rebuild the " +
-        "index (a cross-scheme probe would silently match nothing)")
-    JaccardIndex(
-      spark.read.parquet(s"$path/tokens"),
-      spark.read.parquet(s"$path/prefixes"),
-      spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/df"),
-      meta.getAs[Long]("threshold_bp"), scheme)
+    val l = graft.Store.load(spark, path, "JaccardIndex", JaccardIndex.Scheme)
+    JaccardIndex(l("tokens"), l("prefixes"), l("postings"), l("df"),
+      l.long("threshold_bp"))
   }
 
   /** EXACT Jaccard pairs of an ARRIVING batch against the STORED base

@@ -31,9 +31,9 @@ object Entity {
     * `prefixLen` are PINNED at fit: a probe blocked or scored
     * differently than the registry was resolved with would silently
     * link wrong, so the query sides take them from here (the
-    * CorpusIndex parameter-rides-with-the-artifact rule), and `meta`
-    * carries them with the scheme for [[Entity.loadRegistry]] to
-    * re-check.
+    * CorpusIndex parameter-rides-with-the-artifact rule), and the
+    * [[graft.Store]] manifest carries them with the scheme for
+    * [[Entity.loadRegistry]] to re-check.
     *
     * INCREMENTAL-vs-REBUILD contract (the honest divergence, pinned in
     * OpsSpec): [[Entity.admitBatch]] NEVER merges two entities the
@@ -58,8 +58,8 @@ object Entity {
       * surviving rec_id (the fit-time election rule applied to the
       * survivors); a fully-retracted component vanishes. Lazy like
       * every other remove (one anti-join + one canonical-grain
-      * aggregate ride the stored-relation scan; [[save]] is the
-      * compaction).
+      * aggregate ride the stored-relation scan; [[save]] to a new path
+      * is the compaction).
       *
       * The honest divergence, pinned (the admitBatch no-merge twin):
       * remove NEVER RE-SPLITS a component. Membership comes from the
@@ -97,14 +97,10 @@ object Entity {
       ids.select(col(idCol).cast("long").as("rec_id")).distinct()
         .join(records.select(col("rec_id")), Seq("rec_id"), "left_anti")
 
-    def save(path: String): Unit = {
-      records.write.mode("overwrite").parquet(s"$path/records")
-      val spark = records.sparkSession
-      import spark.implicits._
-      Seq((threshold, prefixLen, scheme))
-        .toDF("threshold", "prefix_len", "er_scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "EntityRegistry", scheme,
+        Seq("threshold" -> threshold, "prefix_len" -> prefixLen),
+        "records" -> records)
   }
 
   object EntityRegistry {
@@ -114,20 +110,14 @@ object Entity {
     val Scheme = 1
   }
 
-  /** Read an [[EntityRegistry]] written by [[EntityRegistry.save]].
-    * Parameters come from the stored meta row, never the caller; a
-    * scheme mismatch fails loudly here rather than silently
-    * mis-linking at probe time. */
+  /** Read an [[EntityRegistry]] written by [[EntityRegistry.save]]
+    * through [[graft.Store.load]]. Parameters come from the manifest,
+    * never the caller; a scheme mismatch fails loudly here rather than
+    * silently mis-linking at probe time. */
   def loadRegistry(spark: SparkSession, path: String): EntityRegistry = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("er_scheme")
-    require(scheme == EntityRegistry.Scheme,
-      s"stored EntityRegistry at $path uses scheme $scheme but this " +
-        s"build produces ${EntityRegistry.Scheme} — rebuild the " +
-        "registry (a cross-scheme probe could silently mis-link)")
-    EntityRegistry(spark.read.parquet(s"$path/records"),
-      meta.getAs[Double]("threshold"), meta.getAs[Int]("prefix_len"),
-      scheme)
+    val l = graft.Store.load(spark, path, "EntityRegistry",
+      EntityRegistry.Scheme)
+    EntityRegistry(l("records"), l.double("threshold"), l.int("prefix_len"))
   }
 
   /** Resolve a record corpus into a fresh registry — the q285 pipeline

@@ -758,20 +758,17 @@ object Multimodal {
     * family: decode the base corpus ONCE ([[mediaFingerprints]]), store
     * the 20-byte-per-blob relation, and let every arriving batch pay
     * only its own decode ([[crossNearDupMedia]]) — at 100 TB of media
-    * the per-batch cost must track the batch, never the corpus. `meta`
-    * pins the fingerprint scheme: probing an index written by a build
-    * whose decode→hash pipeline changed would silently match nothing,
-    * so [[loadFingerprintIndex]] rejects it loudly instead.
+    * the per-batch cost must track the batch, never the corpus. The
+    * [[graft.Store]] manifest pins the fingerprint scheme: probing an
+    * index written by a build whose decode→hash pipeline changed would
+    * silently match nothing, so [[loadFingerprintIndex]] rejects it
+    * loudly instead.
     */
   final case class FingerprintIndex(fingerprints: DataFrame,
                                     scheme: Int = FingerprintIndex.Scheme) {
-    def save(path: String): Unit = {
-      fingerprints.write.mode("overwrite").parquet(s"$path/fingerprints")
-      val spark = fingerprints.sparkSession
-      import spark.implicits._
-      Seq(scheme).toDF("fp_scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "FingerprintIndex", scheme, Nil,
+        "fingerprints" -> fingerprints)
 
     /** Fold a new batch in: decode ONLY the batch, union the stored
       * relation — index-linear I/O, batch-linear decode (the
@@ -782,8 +779,8 @@ object Multimodal {
 
     /** RETRACT media from the index — the delete path (r18 verdict #3;
       * the [[graft.ops.Dedup.JaccardIndex.remove]] posture): one id
-      * anti-join on the 20-byte relation. Lazy until [[save]] — which
-      * IS the merge-time compaction. Phantom ids are state no-ops,
+      * anti-join on the 20-byte relation. Lazy until [[save]] to a new
+      * path — which IS the merge-time compaction. Phantom ids are state no-ops,
       * listed by [[removeAudit]]. remove ≡ rebuild exactly here (no
       * caps, no pinned ordering — the relation is row-per-media). */
     def remove(ids: DataFrame, idCol: String): FingerprintIndex =
@@ -810,15 +807,9 @@ object Multimodal {
     FingerprintIndex(mediaFingerprints(media))
 
   def loadFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String): FingerprintIndex = {
-    val scheme = spark.read.parquet(s"$path/meta").head()
-      .getAs[Int]("fp_scheme")
-    require(scheme == FingerprintIndex.Scheme,
-      s"stored FingerprintIndex at $path uses scheme $scheme but this " +
-        s"build produces ${FingerprintIndex.Scheme} — rebuild (a " +
-        "cross-scheme probe would silently match nothing)")
-    FingerprintIndex(spark.read.parquet(s"$path/fingerprints"), scheme)
-  }
+                           path: String): FingerprintIndex =
+    FingerprintIndex(graft.Store.load(spark, path, "FingerprintIndex",
+      FingerprintIndex.Scheme)("fingerprints"))
 
   /** Near-duplicates of an ARRIVING media batch against the stored
     * base — [[hammingNearDup]]'s cross shape (the

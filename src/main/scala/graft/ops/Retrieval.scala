@@ -1,11 +1,8 @@
 package graft.ops
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Lexical retrieval over a document corpus — BM25 ranking of corpus
   * documents against a (small) query set.
@@ -259,13 +256,9 @@ object Retrieval {
     * stats never costs IO. That replaces bm25TopK's corpus-wide
     * tokenize+explode+semi-join with a read of ~|query vocab| row groups.
     *
-    * On disk an index is one directory: the `postings/` parquet table
-    * and `manifest.json`, a small JSON document (kind, scheme, `n_docs`,
-    * `sum_dlen`, the postings schema) that [[save]] writes on the driver
-    * LAST and [[loadPostings]] reads on the driver, so opening an index
-    * runs no Spark job. A directory without a manifest is not an index:
-    * a save that died partway, or the older `meta/` table layout, is
-    * refused at load.
+    * On disk an index is a [[graft.Store]] artifact: the `postings/`
+    * relation plus a manifest carrying `n_docs` and `sum_dlen`, so
+    * opening an index runs no Spark job.
     *
     * Corpus stats are stored EXACTLY: `n_docs` and `sum_dlen` as longs
     * (token counts are integers; the long sum is exact), so a probe's
@@ -292,35 +285,15 @@ object Retrieval {
       * rendered to the double bm25TopK's `avg` computes. */
     def avgdl: Double = sumDlen.toDouble / nDocs
 
-    /** Store under `path` as the `postings/` parquet table plus
-      * `manifest.json`. The old manifest is deleted FIRST and the new
-      * one published LAST (temp file + rename), so a save that fails in
-      * between leaves a directory [[loadPostings]] refuses, never a torn
-      * index that loads. Postings are range-partitioned and sorted by
-      * term so row-group stats make the probe's pushed `IN(term, …)`
-      * filter an index scan, not a table scan. */
-    def save(path: String): Unit = {
-      val manifest = new Path(path, PostingsIndex.Manifest)
-      val fs = manifest.getFileSystem(
-        postings.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(manifest, false)
-      postings
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("d_id"))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      val mapper = new ObjectMapper()
-      val doc = mapper.createObjectNode()
-        .put("kind", PostingsIndex.Kind)
-        .put("scheme", scheme)
-        .put("n_docs", nDocs)
-        .put("sum_dlen", sumDlen)
-      doc.set[JsonNode]("postings_schema", mapper.readTree(postings.schema.json))
-      val tmp = new Path(path, s"_${PostingsIndex.Manifest}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(mapper.writeValueAsBytes(doc)) finally out.close()
-      require(fs.rename(tmp, manifest),
-        s"PostingsIndex.save: could not publish $manifest")
-    }
+    /** Store under `path` through [[graft.Store]] (the `postings/`
+      * table plus `manifest.json`). Postings are range-partitioned and
+      * sorted by term so row-group stats make the probe's pushed
+      * `IN(term, …)` filter an index scan, not a table scan. */
+    def save(path: String): Unit =
+      graft.Store.save(path, "PostingsIndex", scheme,
+        Seq("n_docs" -> nDocs, "sum_dlen" -> sumDlen),
+        "postings" -> postings.repartitionByRange(col("term"))
+          .sortWithinPartitions(col("term"), col("d_id")))
   }
 
   object PostingsIndex {
@@ -328,8 +301,6 @@ object Retrieval {
       * stored (term, tf, dlen) rows would stop matching what this build
       * computes for the same text. */
     val Scheme = 1
-    private[ops] val Kind = "PostingsIndex"
-    private[ops] val Manifest = "manifest.json"
   }
 
   /** Build a [[PostingsIndex]] from a corpus: one tokenize of each doc
@@ -355,35 +326,14 @@ object Retrieval {
     PostingsIndex(postings, statsRow.getLong(0), statsRow.getLong(1))
   }
 
-  /** Read a [[PostingsIndex]] written by [[PostingsIndex.save]]. The
-    * manifest is read on the driver and its postings schema handed to
-    * the parquet reader, so loading runs no Spark job. Stats come from
-    * the manifest, never the caller; a missing manifest (an unfinished
-    * save, or the older `meta/` layout) and a scheme mismatch fail
-    * loudly here rather than silently mis-scoring probes.
+  /** Read a [[PostingsIndex]] written by [[PostingsIndex.save]] through
+    * [[graft.Store.load]]: no Spark job, stats from the manifest, and an
+    * unfinished save, the older `meta/` layout or a scheme mismatch
+    * refused loudly rather than silently mis-scoring probes.
     */
   def loadPostings(spark: SparkSession, path: String): PostingsIndex = {
-    val manifest = new Path(path, PostingsIndex.Manifest)
-    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(manifest),
-      s"no PostingsIndex at $path: $manifest is missing — the save did " +
-        "not finish, or the directory predates the manifest layout (a " +
-        "meta/ table); rebuild the index")
-    val in = fs.open(manifest)
-    val doc = try new ObjectMapper().readTree(in.readAllBytes())
-      finally in.close()
-    val kind = doc.path("kind").asText()
-    require(kind == PostingsIndex.Kind,
-      s"$manifest describes a '$kind', not a ${PostingsIndex.Kind}")
-    val scheme = doc.get("scheme").asInt()
-    require(scheme == PostingsIndex.Scheme,
-      s"stored PostingsIndex at $path uses scheme $scheme but this build " +
-        s"produces scheme ${PostingsIndex.Scheme} — rebuild the index (a " +
-        "cross-tokenizer probe would silently mis-score)")
-    val schema = DataType.fromJson(doc.get("postings_schema").toString)
-      .asInstanceOf[StructType]
-    PostingsIndex(spark.read.schema(schema).parquet(s"$path/postings"),
-      doc.get("n_docs").asLong(), doc.get("sum_dlen").asLong(), scheme)
+    val l = graft.Store.load(spark, path, "PostingsIndex", PostingsIndex.Scheme)
+    PostingsIndex(l("postings"), l.long("n_docs"), l.long("sum_dlen"))
   }
 
   /** BM25 rank a query batch against a STORED index — the per-batch

@@ -201,17 +201,13 @@ object Similarity {
   final case class IvfIndex(centroids: DataFrame, assigned: DataFrame,
                             nlist: Int, dim: Int,
                             scheme: Int = IvfIndex.Scheme) {
-    /** Store as three parquet tables under `path` (`centroids/`,
-      * `assigned/`, `meta/`); meta pins (nlist, dim, scheme) so a reader
-      * cannot probe with mismatched parameters. */
-    def save(path: String): Unit = {
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      assigned.write.mode("overwrite").parquet(s"$path/assigned")
-      val spark = centroids.sparkSession
-      import spark.implicits._
-      Seq((nlist, dim, scheme)).toDF("nlist", "dim", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    /** Store through [[graft.Store]] (`centroids/`, `assigned/`); the
+      * manifest pins (nlist, dim, scheme) so a reader cannot probe with
+      * mismatched parameters. */
+    def save(path: String): Unit =
+      graft.Store.save(path, "IvfIndex", scheme,
+        Seq("nlist" -> nlist, "dim" -> dim),
+        "centroids" -> centroids, "assigned" -> assigned)
 
     /** Centers as a driver-side array ordered by cluster id — the form
       * [[graft.expr.VecNearest]] wants. Config-sized (nlist × dim). */
@@ -239,8 +235,9 @@ object Similarity {
       * symmetry — the quantizer is frozen between refits, so remove ≡
       * rebuild-on-survivors for probe RESULTS under the same centers,
       * while cell balance drifts toward the refit cadence exactly as
-      * extends do). Lazy until [[save]], which IS the merge-time
-      * compaction. Phantom ids are state no-ops, listed by
+      * extends do). Lazy until [[save]] to a new path, which IS the
+      * merge-time compaction ([[graft.Store]] refuses a save over the
+      * index's own directory). Phantom ids are state no-ops, listed by
       * [[removeAudit]]. */
     def remove(ids: DataFrame, idCol: String): IvfIndex =
       copy(assigned = assigned.join(
@@ -265,22 +262,15 @@ object Similarity {
     val OvergrowthFactor = 4.0
   }
 
-  /** Read an [[IvfIndex]] written by [[IvfIndex.save]]. Parameters come
-    * from the stored meta row, never the caller; a scheme mismatch fails
-    * loudly here rather than silently probing the wrong cells.
+  /** Read an [[IvfIndex]] written by [[IvfIndex.save]] through
+    * [[graft.Store.load]]. Parameters come from the manifest, never the
+    * caller; a scheme mismatch fails loudly here rather than silently
+    * probing the wrong cells.
     */
   def loadIvf(spark: org.apache.spark.sql.SparkSession,
               path: String): IvfIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
-    require(scheme == IvfIndex.Scheme,
-      s"stored IvfIndex at $path uses fit scheme $scheme but this build " +
-        s"produces scheme ${IvfIndex.Scheme} — rebuild the index (a " +
-        "cross-scheme probe would route queries to the wrong cells)")
-    IvfIndex(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/assigned"),
-      meta.getAs[Int]("nlist"), meta.getAs[Int]("dim"), scheme)
+    val l = graft.Store.load(spark, path, "IvfIndex", IvfIndex.Scheme)
+    IvfIndex(l("centroids"), l("assigned"), l.int("nlist"), l.int("dim"))
   }
 
   /** Assign a new batch against the STORED centroids (no refit) and
@@ -971,14 +961,10 @@ object Similarity {
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
                            m: Int, ksub: Int, dim: Int,
                            scheme: Int = PqIndex.Scheme) {
-    def save(path: String): Unit = {
-      codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      val spark = codebooks.sparkSession
-      import spark.implicits._
-      Seq((m, ksub, dim, scheme)).toDF("m", "ksub", "dim", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "PqIndex", scheme,
+        Seq("m" -> m, "ksub" -> ksub, "dim" -> dim),
+        "codebooks" -> codebooks, "codes" -> codes)
 
     /** Centers as a driver-side flat array ordered by (subspace, cluster)
       * — index j*ksub+c holds codebook center (j, c). Config-sized
@@ -995,21 +981,13 @@ object Similarity {
     val Scheme = 1
   }
 
-  /** Read a [[PqIndex]] written by [[PqIndex.save]]; parameters come from
-    * the stored meta, and a scheme mismatch fails loudly here. */
+  /** Read a [[PqIndex]] written by [[PqIndex.save]] through
+    * [[graft.Store.load]]; parameters come from the manifest, and a
+    * scheme mismatch fails loudly here. */
   def loadPq(spark: org.apache.spark.sql.SparkSession,
              path: String): PqIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
-    require(scheme == PqIndex.Scheme,
-      s"stored PqIndex at $path uses fit scheme $scheme but this build " +
-        s"produces scheme ${PqIndex.Scheme} — rebuild the index (codes " +
-        "from another scheme would decode against the wrong centers)")
-    PqIndex(
-      spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
-      meta.getAs[Int]("dim"), scheme)
+    val l = graft.Store.load(spark, path, "PqIndex", PqIndex.Scheme)
+    PqIndex(l("codebooks"), l("codes"), l.int("m"), l.int("ksub"), l.int("dim"))
   }
 
   /** Fit the m per-subspace codebooks on a config-sized sample and encode
@@ -1292,16 +1270,10 @@ object Similarity {
   final case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame,
                               file: DataFrame, nlist: Int, m: Int, ksub: Int,
                               dim: Int, scheme: Int = IvfPqIndex.Scheme) {
-    def save(path: String): Unit = {
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-      file.write.mode("overwrite").parquet(s"$path/file")
-      val spark = centroids.sparkSession
-      import spark.implicits._
-      Seq((nlist, m, ksub, dim, scheme))
-        .toDF("nlist", "m", "ksub", "dim", "scheme")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    def save(path: String): Unit =
+      graft.Store.save(path, "IvfPqIndex", scheme,
+        Seq("nlist" -> nlist, "m" -> m, "ksub" -> ksub, "dim" -> dim),
+        "centroids" -> centroids, "codebooks" -> codebooks, "file" -> file)
 
     private[ops] def centersFlat: Array[Seq[Double]] =
       codebooks.orderBy(col("subspace").asc, col("cluster").asc).collect()
@@ -1315,21 +1287,14 @@ object Similarity {
     val Scheme = 1
   }
 
-  /** Read an [[IvfPqIndex]] written by [[IvfPqIndex.save]]; parameters
-    * come from the stored meta, scheme mismatches fail loudly. */
+  /** Read an [[IvfPqIndex]] written by [[IvfPqIndex.save]] through
+    * [[graft.Store.load]]; parameters come from the manifest, scheme
+    * mismatches fail loudly. */
   def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("scheme")
-    require(scheme == IvfPqIndex.Scheme,
-      s"stored IvfPqIndex at $path uses fit scheme $scheme but this " +
-        s"build produces scheme ${IvfPqIndex.Scheme} — rebuild the index")
-    IvfPqIndex(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/file"),
-      meta.getAs[Int]("nlist"), meta.getAs[Int]("m"),
-      meta.getAs[Int]("ksub"), meta.getAs[Int]("dim"), scheme)
+    val l = graft.Store.load(spark, path, "IvfPqIndex", IvfPqIndex.Scheme)
+    IvfPqIndex(l("centroids"), l("codebooks"), l("file"),
+      l.int("nlist"), l.int("m"), l.int("ksub"), l.int("dim"))
   }
 
   /** Fit the coarse quantizer AND the PQ codebooks (both on config-sized

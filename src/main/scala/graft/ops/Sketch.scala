@@ -235,23 +235,23 @@ object Sketch {
     idx.sketches.select(col("group"),
       hll_sketch_estimate(col("sk")).as("est"))
 
-  /** Persist the registry (sketches as a parquet BINARY column +
-    * lgK/scheme meta). */
-  def saveCardinality(idx: CardinalityIndex, path: String): Unit = {
-    idx.sketches.write.mode("overwrite").parquet(s"$path/sketches")
-    val spark = idx.sketches.sparkSession
-    import spark.implicits._
-    Seq((idx.lgK, idx.keyScheme)).toDF("lg_k", "key_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Version of the stored sketch bytes (DataSketches HLL and Spark's
+    * Count–Min serializations) both registries are saved under. */
+  private val SketchScheme = 1
 
-  /** Read a stored registry; the meta rides along so a later
+  /** Persist the registry through [[graft.Store]] (sketches as a parquet
+    * BINARY column; lgK and the key scheme in the manifest). */
+  def saveCardinality(idx: CardinalityIndex, path: String): Unit =
+    graft.Store.save(path, "CardinalityIndex", SketchScheme,
+      Seq("lg_k" -> idx.lgK, "key_scheme" -> idx.keyScheme),
+      "sketches" -> idx.sketches)
+
+  /** Read a stored registry; the key scheme rides along so a later
     * [[extendCardinality]] under a foreign scheme still fails loudly. */
   def loadCardinality(spark: org.apache.spark.sql.SparkSession,
                       path: String): CardinalityIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    CardinalityIndex(spark.read.parquet(s"$path/sketches"),
-      meta.getAs[Int]("lg_k"), meta.getAs[String]("key_scheme"))
+    val l = graft.Store.load(spark, path, "CardinalityIndex", SketchScheme)
+    CardinalityIndex(l("sketches"), l.int("lg_k"), l.string("key_scheme"))
   }
 
   /** Typed UDAF: union of serialized Count–Min sketches by counter
@@ -301,8 +301,8 @@ object Sketch {
     * rescan.
     *
     * `eps`/`confidence`/`seed` are frozen at fit time and ride the
-    * meta: a union across differently-shaped sketches is meaningless
-    * and the library throws on it; `itemScheme` is the tokenizer-scheme
+    * [[graft.Store]] manifest: a union across differently-shaped
+    * sketches is meaningless and the library throws on it; `itemScheme` is the tokenizer-scheme
     * discipline shared with every stored artifact here.
     */
   case class FreqIndex(sketches: DataFrame, eps: Double, confidence: Double,
@@ -414,24 +414,20 @@ object Sketch {
         col("__z.__ests").as("est"))
   }
 
-  /** Persist the registry (sketches as a parquet BINARY column +
-    * shape/scheme meta). */
-  def saveFreq(idx: FreqIndex, path: String): Unit = {
-    idx.sketches.write.mode("overwrite").parquet(s"$path/sketches")
-    val spark = idx.sketches.sparkSession
-    import spark.implicits._
-    Seq((idx.eps, idx.confidence, idx.seed, idx.itemScheme))
-      .toDF("eps", "confidence", "seed", "item_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist the registry through [[graft.Store]] (sketches as a parquet
+    * BINARY column; shape and item scheme in the manifest). */
+  def saveFreq(idx: FreqIndex, path: String): Unit =
+    graft.Store.save(path, "FreqIndex", SketchScheme,
+      Seq("eps" -> idx.eps, "confidence" -> idx.confidence,
+        "seed" -> idx.seed, "item_scheme" -> idx.itemScheme),
+      "sketches" -> idx.sketches)
 
-  /** Read a stored registry; the meta rides along so a later
+  /** Read a stored registry; the item scheme rides along so a later
     * [[extendFreq]] under a foreign scheme still fails loudly. */
   def loadFreq(spark: org.apache.spark.sql.SparkSession,
                path: String): FreqIndex = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    FreqIndex(spark.read.parquet(s"$path/sketches"),
-      meta.getAs[Double]("eps"), meta.getAs[Double]("confidence"),
-      meta.getAs[Int]("seed"), meta.getAs[String]("item_scheme"))
+    val l = graft.Store.load(spark, path, "FreqIndex", SketchScheme)
+    FreqIndex(l("sketches"), l.double("eps"), l.double("confidence"),
+      l.int("seed"), l.string("item_scheme"))
   }
 }

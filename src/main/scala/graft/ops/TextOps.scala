@@ -217,28 +217,19 @@ object TextOps {
     * silently scoring with drifted grams. */
   val LangIdScheme: Int = 1
 
-  /** Persist a fitted language-profile model (profiles + scheme/K
-    * meta) — fit once per corpus version, score every batch. */
-  def saveLangProfiles(model: DataFrame, path: String): Unit = {
-    val k = model.agg(max(col("mrank"))).head().getInt(0)
-    model.write.mode("overwrite").parquet(s"$path/profiles")
-    model.sparkSession.createDataFrame(Seq((LangIdScheme, k)))
-      .toDF("trigram_scheme", "profile_k")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist a fitted language-profile model through [[graft.Store]]
+    * under [[LangIdScheme]] — fit once per corpus version, score every
+    * batch. */
+  def saveLangProfiles(model: DataFrame, path: String): Unit =
+    graft.Store.save(path, "LangProfiles", LangIdScheme, Nil,
+      "profiles" -> model)
 
   /** Read stored language profiles; a foreign trigram scheme fails
     * loudly — scoring with profiles whose gram recipe drifted is
     * silent wrongness, the lifecycle contract everywhere here. */
   def loadLangProfiles(spark: org.apache.spark.sql.SparkSession,
-                       path: String): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("trigram_scheme")
-    require(scheme == LangIdScheme,
-      s"stored language profiles at $path use trigram scheme $scheme " +
-        s"but this build is scheme $LangIdScheme — refit")
-    spark.read.parquet(s"$path/profiles")
-  }
+                       path: String): DataFrame =
+    graft.Store.load(spark, path, "LangProfiles", LangIdScheme)("profiles")
 
   /** Cavnar–Trenkle scoring half: each document's top-`docM` ranked
     * trigrams are compared to every language profile with the
@@ -1266,28 +1257,18 @@ object TextOps {
     df.select(explode(tokens(col(textCol))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
 
-  /** Persist a [[termFreqs]] table (+ tokenizer-scheme meta). */
-  def saveTermFreqs(freqs: DataFrame, path: String): Unit = {
-    freqs.write.mode("overwrite").parquet(s"$path/freqs")
-    val spark = freqs.sparkSession
-    import spark.implicits._
-    Seq(Tuple1(TokenizerScheme)).toDF("tokenizer_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist a [[termFreqs]] table through [[graft.Store]] under
+    * [[TokenizerScheme]]. */
+  def saveTermFreqs(freqs: DataFrame, path: String): Unit =
+    graft.Store.save(path, "TermFreqs", TokenizerScheme, Nil, "freqs" -> freqs)
 
   /** Read a stored [[termFreqs]] table; a tokenizer-scheme mismatch
     * fails loudly here rather than silently skewing every downstream
     * probability.
     */
   def loadTermFreqs(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame = {
-    val scheme = spark.read.parquet(s"$path/meta")
-      .head().getAs[Int]("tokenizer_scheme")
-    require(scheme == TokenizerScheme,
-      s"stored term-frequency table at $path uses tokenizer scheme " +
-        s"$scheme but this build produces $TokenizerScheme — rebuild it")
-    spark.read.parquet(s"$path/freqs")
-  }
+                    path: String): DataFrame =
+    graft.Store.load(spark, path, "TermFreqs", TokenizerScheme)("freqs")
 
   /** Fold a new ingest batch into an existing frequency table — the
     * per-batch compaction: cost tracks the BATCH (its token aggregate)
@@ -1307,34 +1288,27 @@ object TextOps {
     * covers restarts and other jobs — a tokenizer outlives any JVM).
     * Rank order IS the table's semantics (merges apply in training
     * order), so rank rides along and [[loadMerges]] re-sorts by it.
+    * Stored through [[graft.Store]] under [[TokenizerScheme]].
     */
-  def saveMerges(merges: DataFrame, path: String): Unit = {
-    merges.write.mode("overwrite").parquet(s"$path/merges")
-    val spark = merges.sparkSession
-    import spark.implicits._
-    Seq(Tuple1(TokenizerScheme)).toDF("tokenizer_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveMerges(merges: DataFrame, path: String): Unit =
+    graft.Store.save(path, "BpeMerges", TokenizerScheme, Nil,
+      "merges" -> merges)
 
   /** Read a stored merge table as the `Seq[(a, b)]` the encode side
     * consumes ([[bpeTokenCount]]/[[bpeTokens]]/[[tokenizerFertility]]/
     * subword [[packSequences]]) — in rank order. The driver-side
-    * collect is vocabulary-bounded (`numMerges` rows) by construction.
+    * collect is vocabulary-bounded (`numMerges` rows) by construction,
+    * so it is one job and the rank sort runs on the driver.
     * A tokenizer-scheme mismatch fails loudly: a table learned under a
     * different word segmentation would silently mis-encode every
     * document.
     */
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
-                 path: String): Seq[(String, String)] = {
-    val scheme = spark.read.parquet(s"$path/meta")
-      .head().getAs[Int]("tokenizer_scheme")
-    require(scheme == TokenizerScheme,
-      s"stored merge table at $path uses tokenizer scheme $scheme but " +
-        s"this build produces $TokenizerScheme — relearn it")
-    spark.read.parquet(s"$path/merges").orderBy(col("rank").asc)
-      .select(col("a"), col("b")).collect()
-      .map(r => (r.getString(0), r.getString(1))).toIndexedSeq
-  }
+                 path: String): Seq[(String, String)] =
+    graft.Store.load(spark, path, "BpeMerges", TokenizerScheme)("merges")
+      .select(col("rank").cast("long"), col("a"), col("b")).collect()
+      .sortBy(_.getLong(0))
+      .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
 
   /** Per-source distribution drift: the KL divergence of each source's
     * unigram token distribution from the whole-corpus distribution —
@@ -2425,32 +2399,22 @@ object TextOps {
     ImportanceModel(lr, numBuckets, alpha)
   }
 
-  /** Persist a fitted [[ImportanceModel]] (+ tokenizer-scheme /
-    * numBuckets / alpha meta — the [[saveTermFreqs]] discipline: a model
+  /** Persist a fitted [[ImportanceModel]] through [[graft.Store]] under
+    * [[TokenizerScheme]], numBuckets and alpha in the manifest: a model
     * hashed under one tokenizer or bucket count and probed under another
     * silently mis-scores every doc, so the mismatch fails loudly at
-    * load).
+    * load.
     */
-  def saveImportanceModel(m: ImportanceModel, path: String): Unit = {
-    m.lr.write.mode("overwrite").parquet(s"$path/lr")
-    val spark = m.lr.sparkSession
-    import spark.implicits._
-    Seq((TokenizerScheme, m.numBuckets, m.alpha))
-      .toDF("tokenizer_scheme", "num_buckets", "alpha")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveImportanceModel(m: ImportanceModel, path: String): Unit =
+    graft.Store.save(path, "ImportanceModel", TokenizerScheme,
+      Seq("num_buckets" -> m.numBuckets, "alpha" -> m.alpha), "lr" -> m.lr)
 
   /** Read a stored [[ImportanceModel]]; stale tokenizer scheme fails
     * loudly here (the [[loadTermFreqs]] contract). */
   def loadImportanceModel(spark: org.apache.spark.sql.SparkSession,
                           path: String): ImportanceModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val scheme = meta.getAs[Int]("tokenizer_scheme")
-    require(scheme == TokenizerScheme,
-      s"stored importance model at $path uses tokenizer scheme $scheme " +
-        s"but this build produces $TokenizerScheme — refit it")
-    ImportanceModel(spark.read.parquet(s"$path/lr"),
-      meta.getAs[Int]("num_buckets"), meta.getAs[Double]("alpha"))
+    val l = graft.Store.load(spark, path, "ImportanceModel", TokenizerScheme)
+    ImportanceModel(l("lr"), l.int("num_buckets"), l.double("alpha"))
   }
 
   /** Score a document batch under a fitted [[ImportanceModel]]: each

@@ -394,9 +394,7 @@ class MultimodalSpec extends SparkSpec {
     assert(ext === full)
     // scheme guard: a stored index from a different pipeline version
     // refuses to load
-    import org.apache.spark.sql.functions.lit
-    idx.fingerprints.sparkSession.range(1).select(lit(99).as("fp_scheme"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    forgeStoredScheme(dir, 99)
     intercept[IllegalArgumentException] {
       Multimodal.loadFingerprintIndex(spark, dir)
     }

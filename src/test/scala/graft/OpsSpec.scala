@@ -135,8 +135,7 @@ class OpsSpec extends SparkSpec {
       (4L, 2L, 2L, "promo\nbody4"),
       (5L, 2L, 2L, "nav\nbody5")))
     // stale derivation scheme fails loudly at load
-    Seq(("\n", 99)).toDF("sep", "scheme")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    forgeStoredScheme(dir, 99)
     val e = intercept[IllegalArgumentException] {
       Dedup.loadBoilerplateIndex(spark, dir)
     }
@@ -1982,6 +1981,187 @@ class OpsSpec extends SparkSpec {
       === idx.postings.as[(String, Long, Long, Long)].collect().toSet)
   }
 
+  /** One path-based stored-artifact kind for the store laws. `save`
+    * stores a small fresh artifact at a directory, passing the relation
+    * it writes last through the given function; `load` returns the
+    * loaded relations; `resave` loads a directory and saves the result
+    * back over it. */
+  private final case class StoredKind(
+      kind: String,
+      save: (String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame) => Unit,
+      load: String => Seq[org.apache.spark.sql.DataFrame],
+      resave: String => Unit)
+
+  private lazy val storedKinds: Seq[StoredKind] = {
+    import graft.ops.{Entity, Multimodal, Retrieval, Sketch}
+    val docs = postingsCorpus
+    val labeled = docs.withColumn("is_t", $"doc_id" % 2 === 0)
+      .withColumn("lang", when($"is_t", "aa").otherwise("bb"))
+      .withColumn("src", lit("s"))
+    val emb = (1L to 40L).map(i => (i, v(i.toInt))).toDF("vec_id", "embedding")
+    val names = Seq((1L, "john smith"), (2L, "jon smith"), (3L, "mary jones"))
+      .toDF("rec_id", "name")
+    val keyed = Seq(("a", "x1"), ("a", "x2"), ("b", "y1")).toDF("src", "k")
+    val media = Seq((1L, Array[Byte](1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12)))
+      .toDF("media_id", "content")
+    def boilerplate = Dedup.fitBoilerplateIndex(labeled, "doc_id", "text", "src", " ")
+    def span = Dedup.fitSpanIndex(docs, "doc_id", "text", window = 2)
+    def corpus = Dedup.buildIndex(docs, "doc_id", "text")
+    def jaccard = Dedup.buildJaccardIndex(
+      docs.select($"doc_id", split($"text", " ").as("sh")), "doc_id", "sh", 5000L)
+    def ivf = Similarity.fitIvf(emb, nlist = 4)
+    def pq = Similarity.fitPq(emb, m = 8, ksub = 4)
+    def ivfPq = Similarity.fitIvfPq(emb, nlist = 4, m = 8, ksub = 4)
+    def registry = Entity.buildRegistry(names, "rec_id", "name")
+    def card = Sketch.fitCardinality(keyed, "src", col("k"), "k-v1")
+    def freq = Sketch.fitFreq(keyed, "src", col("k"), "k-v1")
+    def importance = TextOps.fitImportanceModel(labeled, "text", col("is_t"),
+      numBuckets = 16)
+    def nb = Classify.fitNbClassifier(labeled, "text", col("is_t"))
+    Seq(
+      StoredKind("BoilerplateIndex",
+        (d, f) => boilerplate.copy(lineDf = f(boilerplate.lineDf)).save(d),
+        d => Seq(Dedup.loadBoilerplateIndex(spark, d).lineDf),
+        d => Dedup.loadBoilerplateIndex(spark, d).save(d)),
+      StoredKind("SpanIndex",
+        (d, f) => span.copy(fps = f(span.fps)).save(d),
+        d => Seq(Dedup.loadSpanIndex(spark, d).fps),
+        d => Dedup.loadSpanIndex(spark, d).save(d)),
+      StoredKind("CorpusIndex",
+        (d, f) => corpus.copy(shingles = f(corpus.shingles)).save(d),
+        d => { val i = Dedup.loadIndex(spark, d); Seq(i.bands, i.shingles) },
+        d => Dedup.loadIndex(spark, d).save(d)),
+      StoredKind("JaccardIndex",
+        (d, f) => jaccard.copy(dfTable = f(jaccard.dfTable)).save(d),
+        d => {
+          val i = Dedup.loadJaccardIndex(spark, d)
+          Seq(i.tokens, i.prefixes, i.postings, i.dfTable)
+        },
+        d => Dedup.loadJaccardIndex(spark, d)
+          .remove(Seq(1L).toDF("id"), "id").save(d)),
+      StoredKind("IvfIndex",
+        (d, f) => ivf.copy(assigned = f(ivf.assigned)).save(d),
+        d => { val i = Similarity.loadIvf(spark, d); Seq(i.centroids, i.assigned) },
+        d => Similarity.loadIvf(spark, d)
+          .remove(Seq(1L).toDF("id"), "id").save(d)),
+      StoredKind("PqIndex",
+        (d, f) => pq.copy(codes = f(pq.codes)).save(d),
+        d => { val i = Similarity.loadPq(spark, d); Seq(i.codebooks, i.codes) },
+        d => Similarity.loadPq(spark, d).save(d)),
+      StoredKind("IvfPqIndex",
+        (d, f) => ivfPq.copy(file = f(ivfPq.file)).save(d),
+        d => {
+          val i = Similarity.loadIvfPq(spark, d)
+          Seq(i.centroids, i.codebooks, i.file)
+        },
+        d => Similarity.loadIvfPq(spark, d).save(d)),
+      StoredKind("EntityRegistry",
+        (d, f) => registry.copy(records = f(registry.records)).save(d),
+        d => Seq(Entity.loadRegistry(spark, d).records),
+        d => Entity.loadRegistry(spark, d)
+          .remove(Seq(3L).toDF("id"), "id").save(d)),
+      StoredKind("CardinalityIndex",
+        (d, f) => Sketch.saveCardinality(card.copy(sketches = f(card.sketches)), d),
+        d => Seq(Sketch.loadCardinality(spark, d).sketches),
+        d => Sketch.saveCardinality(Sketch.loadCardinality(spark, d), d)),
+      StoredKind("FreqIndex",
+        (d, f) => Sketch.saveFreq(freq.copy(sketches = f(freq.sketches)), d),
+        d => Seq(Sketch.loadFreq(spark, d).sketches),
+        d => Sketch.saveFreq(Sketch.loadFreq(spark, d), d)),
+      StoredKind("PostingsIndex",
+        (d, f) => {
+          val i = Retrieval.fitPostings(docs)
+          i.copy(postings = f(i.postings)).save(d)
+        },
+        d => Seq(Retrieval.loadPostings(spark, d).postings),
+        d => Retrieval.loadPostings(spark, d).save(d)),
+      StoredKind("FingerprintIndex",
+        (d, f) => {
+          val i = Multimodal.buildFingerprintIndex(media)
+          i.copy(fingerprints = f(i.fingerprints)).save(d)
+        },
+        d => Seq(Multimodal.loadFingerprintIndex(spark, d).fingerprints),
+        d => Multimodal.loadFingerprintIndex(spark, d)
+          .remove(Seq(1L).toDF("id"), "id").save(d)),
+      StoredKind("LangProfiles",
+        (d, f) => TextOps.saveLangProfiles(
+          f(TextOps.fitLangProfiles(labeled, "lang", "text", profileK = 8)), d),
+        d => Seq(TextOps.loadLangProfiles(spark, d)),
+        d => TextOps.saveLangProfiles(TextOps.loadLangProfiles(spark, d), d)),
+      StoredKind("TermFreqs",
+        (d, f) => TextOps.saveTermFreqs(f(TextOps.termFreqs(docs, "text")), d),
+        d => Seq(TextOps.loadTermFreqs(spark, d)),
+        d => TextOps.saveTermFreqs(TextOps.loadTermFreqs(spark, d), d)),
+      // loadMerges collects, so its self-save reads the stored table
+      StoredKind("BpeMerges",
+        (d, f) => TextOps.saveMerges(
+          f(TextOps.bpeMerges(docs, "text", numMerges = 3)), d),
+        d => Seq(TextOps.loadMerges(spark, d).toDF("a", "b")),
+        d => TextOps.saveMerges(spark.read.parquet(s"$d/merges"), d)),
+      StoredKind("ImportanceModel",
+        (d, f) => TextOps.saveImportanceModel(
+          importance.copy(lr = f(importance.lr)), d),
+        d => Seq(TextOps.loadImportanceModel(spark, d).lr),
+        d => TextOps.saveImportanceModel(
+          TextOps.loadImportanceModel(spark, d), d)),
+      StoredKind("NbModel",
+        (d, f) => Classify.saveNbModel(nb.copy(weights = f(nb.weights)), d),
+        d => Seq(Classify.loadNbModel(spark, d).weights),
+        d => Classify.saveNbModel(Classify.loadNbModel(spark, d), d)))
+  }
+
+  private def storeDir(kind: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-store-$kind").toString
+
+  /** Every row of the stored relations, in a comparable form. */
+  private def storedRows(rels: Seq[org.apache.spark.sql.DataFrame]): Seq[Seq[String]] =
+    rels.map(_.toJSON.collect().sorted.toSeq)
+
+  test("store laws cover every path-based stored-artifact kind") {
+    assert(storedKinds.map(_.kind).distinct.size === 17)
+  }
+
+  test("stored artifacts: a save that fails in the last relation leaves a directory load refuses, naming it") {
+    // the planted failure throws on the first row of the relation
+    // written last, after every other relation of the new save is down
+    val boom = udf((h: Int) =>
+      if (h == h) throw new IllegalStateException("planted failure") else true)
+    for (k <- storedKinds) {
+      val dir = storeDir(k.kind)
+      k.save(dir, identity)
+      assert(storedRows(k.load(dir)).forall(_.nonEmpty), k.kind)
+      intercept[Exception] {
+        k.save(dir, df => df.filter(boom(hash(df.columns.map(col): _*))))
+      }
+      val e = intercept[IllegalArgumentException](k.load(dir))
+      assert(e.getMessage.contains(dir), s"${k.kind}: ${e.getMessage}")
+      graft.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
+  test("stored artifacts: loading starts no Spark job (loadMerges: only its one collect)") {
+    for (k <- storedKinds) {
+      val dir = storeDir(k.kind)
+      k.save(dir, identity)
+      val (_, jobs) = jobsStartedBy(k.load(dir))
+      assert(jobs === (if (k.kind == "BpeMerges") 1 else 0), k.kind)
+      graft.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
+  test("stored artifacts: a save over the directory it reads is refused and the artifact still loads the same rows") {
+    for (k <- storedKinds) {
+      val dir = storeDir(k.kind)
+      k.save(dir, identity)
+      val before = storedRows(k.load(dir))
+      val e = intercept[IllegalArgumentException](k.resave(dir))
+      assert(e.getMessage.contains(dir), s"${k.kind}: ${e.getMessage}")
+      assert(storedRows(k.load(dir)) === before, k.kind)
+      graft.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
   test("extendPostings ≡ refit on the union; duplicate batch ids are loud") {
     val base = postingsCorpus.filter($"doc_id" <= 4)
     val batch = postingsCorpus.filter($"doc_id" > 4)
@@ -2127,9 +2307,8 @@ class OpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-tf2").toString
     TextOps.saveTermFreqs(
       TextOps.termFreqs(Seq((1L, "x")).toDF("doc_id", "text"), "text"), dir)
-    // overwrite the meta with a bogus scheme
-    Seq(Tuple1(99)).toDF("tokenizer_scheme")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    // overwrite the manifest with a bogus scheme
+    forgeStoredScheme(dir, 99)
     val e = intercept[IllegalArgumentException] {
       TextOps.loadTermFreqs(spark, dir)
     }
@@ -2401,9 +2580,7 @@ class OpsSpec extends SparkSpec {
       t.select(TextOps.bpeEncode(col("text"), m)).as[Seq[String]].head()
     assert(enc(loaded) === enc(inSession))
     // a foreign tokenizer scheme is rejected at load, loudly
-    import org.apache.spark.sql.SaveMode
-    Seq(Tuple1(999)).toDF("tokenizer_scheme")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
+    forgeStoredScheme(dir, 999)
     val e = intercept[IllegalArgumentException](TextOps.loadMerges(spark, dir))
     assert(e.getMessage.contains("scheme"))
   }
@@ -2660,8 +2837,7 @@ class OpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-imp2").toString
     TextOps.saveImportanceModel(
       TextOps.fitImportanceModel(corpus, "text", col("is_t")), dir)
-    Seq((99, 256, 1.0)).toDF("tokenizer_scheme", "num_buckets", "alpha")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    forgeStoredScheme(dir, 99)
     val e = intercept[IllegalArgumentException] {
       TextOps.loadImportanceModel(spark, dir)
     }
@@ -3372,12 +3548,8 @@ class OpsSpec extends SparkSpec {
     assert(idx2.extend(Seq((50L, Seq("again"))).toDF("id", "sh"),
       "id", "sh", verifyIds = false).tokens
       .filter(col("base_id") === 50L).count() === 2L)
-    // stale-scheme rejection: a meta row from a different build refuses
-    val spark2 = spark
-    import spark2.implicits._
-    Seq((7000L, Dedup.JaccardIndex.Scheme + 1))
-      .toDF("threshold_bp", "prefix_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    // stale-scheme rejection: a manifest from a different build refuses
+    forgeStoredScheme(dir, Dedup.JaccardIndex.Scheme + 1)
     val e2 = intercept[IllegalArgumentException] {
       Dedup.loadJaccardIndex(spark, dir)
     }
@@ -3541,11 +3713,7 @@ class OpsSpec extends SparkSpec {
     assert(audit.exists(a => a._1 === "batch" && a._2 === "111" &&
       a._3 > 10L), s"got ${audit.toSeq}")
     // stale scheme rejected at load and at probe
-    val spark2 = spark
-    import spark2.implicits._
-    Seq((0.9, 3, Entity.EntityRegistry.Scheme + 1))
-      .toDF("threshold", "prefix_len", "er_scheme")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    forgeStoredScheme(dir, Entity.EntityRegistry.Scheme + 1)
     val e2 = intercept[IllegalArgumentException] {
       Entity.loadRegistry(spark, dir)
     }
@@ -4510,11 +4678,8 @@ class OpsSpec extends SparkSpec {
     val c = Classify.nbScore(probe, "doc_id", "text", m,
       broadcastModel = false).as[(Long, Double, Boolean)].collect().toSeq
     assert(c === a)
-    // stale scheme: rewrite meta with a foreign tokenizer scheme
-    import spark.implicits._
-    Seq((999, m.alpha, m.bias, m.defaultW))
-      .toDF("tokenizer_scheme", "alpha", "bias", "default_w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    // stale scheme: rewrite the manifest with a foreign tokenizer scheme
+    forgeStoredScheme(dir, 999)
     val e = intercept[IllegalArgumentException] {
       Classify.loadNbModel(spark, dir)
     }
@@ -5765,9 +5930,7 @@ class OpsSpec extends SparkSpec {
     assert(a === b)
     assert(a.map(r => r._1 -> r._2).toMap === Map(1L -> "aa", 2L -> "bb"))
     // foreign scheme must refuse
-    spark.createDataFrame(Seq((LangSchemeProbe.next, 8)))
-      .toDF("trigram_scheme", "profile_k")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    forgeStoredScheme(dir, LangSchemeProbe.next)
     val e = intercept[IllegalArgumentException] {
       TextOps.loadLangProfiles(spark, dir)
     }

@@ -54,6 +54,22 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Rewrite the scheme in the manifest of the artifact stored at `dir`:
+    * the directory an older or newer build would have left. */
+  def forgeStoredScheme(dir: String, scheme: Int): Unit = {
+    val manifest = new org.apache.hadoop.fs.Path(dir, Store.Manifest)
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = fs.open(manifest)
+    val doc = try mapper.readTree(in)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      finally in.close()
+    // through the Hadoop file system, so its checksum file is rewritten too
+    val out = fs.create(manifest, true)
+    try out.write(mapper.writeValueAsBytes(doc.put("scheme", scheme)))
+    finally out.close()
+  }
+
   /** Run `body` and count the classes Spark compiles for it: each
     * generated class that misses the codegen cache is compiled once and
     * counted once. The counter is JVM-wide, so `body` must wait for the
