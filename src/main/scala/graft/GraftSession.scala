@@ -456,6 +456,21 @@ object GraftSession {
       // (jars, classes, files), so isolation protects nothing here; off,
       // a second drain of the same stream compiles none.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Local files without forked processes. Without native libhadoop,
+      // Hadoop's local file system runs `chmod` for every file and
+      // directory it creates and `readlink` for every FileContext link
+      // lookup: LocalFsSpec's AvailableNow drains (3 micro-batches, 4
+      // shuffle partitions) started 527 and 529 processes each, 400 of
+      // them readlink, and a PostingsIndex save 12. NioLocalFileSystem
+      // and NioLocalFs make the same calls through java.nio
+      // (LocalFs.scala), with checksums and FileContext's atomic
+      // no-overwrite rename unchanged: the same work starts none. Hadoop
+      // caches one `file:` FileSystem per JVM and user, built from the
+      // first configuration that asks, so these belong to the
+      // SparkContext's configuration, not to a session.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       // keep saveAsTable (bucketed-table tests/demos) out of the repo dir
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")

@@ -280,6 +280,8 @@ object PipelineQueries {
     if (positional != null) retireDir(positional._2)
     val fpIdx = fpIndexCache.remove(s)
     if (fpIdx != null) retireDir(fpIdx._2)
+    val jacIdx = jacIndexCache.remove(s)
+    if (jacIdx != null) retireDir(jacIdx._2)
     mergesCache.remove(s): Unit
     fit16Cache.remove(s): Unit
   }

@@ -561,6 +561,22 @@ class ScaleSpec extends SparkSpec {
     assert(persisted === Set.empty[String])
   }
 
+  test("clearCaches forgets the stored JaccardIndex: the next q277 builds a new one") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def jacDirs: Set[String] = Option(tmp.listFiles).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("graft-jac-index-")).toSet
+    val q277 = SparkEntry.queries("q277_cross_jaccard_stored")
+    graft.clearCaches(spark)
+    q277(spark, sfDir)
+    val built = jacDirs
+    q277(spark, sfDir) // same session and data dir: the stored index is reused
+    assert(jacDirs === built)
+    graft.clearCaches(spark)
+    q277(spark, sfDir)
+    assert((jacDirs -- built).size === 1,
+      "after clearCaches, q277 must fit and save a new stored index")
+  }
+
   test("int64-envelope widening: q180/q202/q242/kappa stay exact past 2^63 on planted overflow fixtures (the q293 class, r20 sweep)") {
     // The r19 q293 finding generalized: every sufficient-statistic
     // query whose bilinear algebra could pass 2^63 at REALISTIC corpus
