@@ -19,11 +19,11 @@ package object graft {
 
   /** `spark.read.parquet(path)` with the schema Spark inferred for the
     * same file version, so only the first read of a version runs the
-    * schema-inference job. The cache is per session and keyed by the
-    * path, the listed files' (name, size, mtime) and the session's
-    * parquet settings (they decide the inferred types, e.g.
+    * schema-inference job. The schema is a [[SessionMemo]] entry per
+    * path whose version is the listed files' (name, size, mtime) and the
+    * session's parquet settings (they decide the inferred types, e.g.
     * `inferTimestampNTZ`): a rewritten file is inferred again. It holds
-    * schemas only, never data; [[clearCaches]] drops it. A path that
+    * schemas only, never data. A path that
     * does not list (absent, or a glob) reads plainly and fails or
     * resolves exactly as Spark's reader does.
     */
@@ -43,19 +43,11 @@ package object graft {
           k.startsWith("spark.sql.legacy.parquet.")
       }
       val version = (files.result(), settings)
-      val cache = schemaCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap())
-      val schema = cache.compute(path, (_, cached) =>
-        if (cached != null && cached._1 == version) cached
-        else (version, spark.read.parquet(path).schema))._2
+      val schema = SessionMemo(spark, s"schema:$path", version)(
+        spark.read.parquet(path).schema)
       spark.read.schema(schema).parquet(path)
     }
   }
-
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String,
-      ((Seq[(String, Long, Long)], Map[String, String]),
-        org.apache.spark.sql.types.StructType)]]
 
   /** The `events` table's `ts` column has surfaced three different ways as
     * the fixture generator evolved: epoch-nanos LongType (TIMESTAMP(NANOS)
@@ -107,17 +99,14 @@ package object graft {
       ntz.cast(org.apache.spark.sql.types.TimestampType),
       spark.conf.get("spark.sql.session.timeZone"))
 
-  /** Release everything graft memoizes against `spark`: the materialized
-    * near-dup pair set (persisted RDD blocks), the SQL-door Engine and
-    * the [[readParquet]] schemas.
+  /** Release everything graft memoizes against `spark`: every
+    * [[SessionMemo]] entry (stored indexes, the persisted pair set,
+    * fitted models, the SQL-door Engine and the [[readParquet]] schemas).
     * Call at teardown (Bench/Verify do) or between corpora on a
-    * long-lived session; queries re-derive lazily on next use.
+    * long-lived session; queries re-derive lazily on next use. Stored
+    * artifacts' directories are deleted at JVM exit.
     */
-  def clearCaches(spark: SparkSession): Unit = {
-    schemaCache.remove(spark)
-    queries.PipelineQueries.clearCache(spark)
-    queries.AnalyticQueries.clearEngine(spark)
-  }
+  def clearCaches(spark: SparkSession): Unit = SessionMemo.clear(spark)
 
   /** Recursive file-tree delete (no symlink following beyond what
     * File.delete does) — shared by the stored-artifact lifecycles

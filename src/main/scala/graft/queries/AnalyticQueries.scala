@@ -503,37 +503,27 @@ object AnalyticQueries {
     * parse/analyze/optimize all Catalyst (the reference needs
     * sql2ra+raopt+ra2spark for this, SURVEY §3.1).
     *
-    * The Engine is memoized per session (keyed by data dir): constructing
-    * one re-registers all 8 dd views and re-reads parquet footers, which
-    * tripled the apparent cost of every SQL-door query when done per call
-    * (round-2 verdict #5: q33 at 6.7 s vs 0.4 s for the identical q17).
-    * A dir change on the same session rebuilds (and re-registers) cleanly.
+    * The Engine is memoized per session (version: the data dir):
+    * constructing one re-registers all 8 dd views and re-reads parquet
+    * footers, which tripled the apparent cost of every SQL-door query
+    * when done per call (round-2 verdict #5: q33 at 6.7 s vs 0.4 s for
+    * the identical q17). A dir change on the same session rebuilds (and
+    * re-registers) cleanly.
     */
-  private val engineCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (String, Engine, DataFrame)]
-
   private def sqlDoor(s: SparkSession, dir: String, query: String): DataFrame = {
-    val (_, eng, events) = engineCache.compute(s, (sess, cached) =>
-      if (cached != null && cached._1 == dir) cached
-      // events joins the catalog through the nanos-aware reader (see
-      // pipelineDd scaladoc) — same view name, SQL can't tell. BUILDING
-      // the DataFrame reads parquet footers, so it is memoized with the
-      // Engine (round-2 verdict #5: per-call footer IO tripled SQL-door
-      // cost)…
-      else (dir, new Engine(sess, fullDd, dir, format = "parquet"),
-        graft.events(sess, dir)))
+    // events joins the catalog through the nanos-aware reader (see
+    // pipelineDd scaladoc) — same view name, SQL can't tell. BUILDING
+    // the DataFrame reads parquet footers, so it is memoized with the
+    // Engine (round-2 verdict #5: per-call footer IO tripled SQL-door
+    // cost)…
+    val (eng, events) = graft.SessionMemo(s, "sql-door", dir)(
+      (new Engine(s, fullDd, dir, format = "parquet"), graft.events(s, dir)))
     // …but RE-BINDING the cached plan is IO-free, so do that every call:
     // a caller that dropped or shadowed the session's `events` view
     // would otherwise silently resolve against the wrong view forever.
     events.createOrReplaceTempView("events")
     eng.sql(query)
   }
-
-  /** Drop the session's memoized Engine (its temp views die with the
-    * session anyway; this frees the map entry and forces re-registration
-    * on next use). Part of `graft.clearCaches` — Bench/Verify teardown.
-    */
-  def clearEngine(s: SparkSession): Unit = engineCache.remove(s)
 
   def q31(s: SparkSession, dir: String): DataFrame = sqlDoor(s, dir,
     """SELECT o_orderpriority, count(*) AS cnt

@@ -561,20 +561,56 @@ class ScaleSpec extends SparkSpec {
     assert(persisted === Set.empty[String])
   }
 
-  test("clearCaches forgets the stored JaccardIndex: the next q277 builds a new one") {
+  test("session memo: each entry builds once per (session, dir) and again after clearCaches") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def jacDirs: Set[String] = Option(tmp.listFiles).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("graft-jac-index-")).toSet
-    val q277 = SparkEntry.queries("q277_cross_jaccard_stored")
+    def dirs(prefix: String): Set[String] = Option(tmp.listFiles)
+      .getOrElse(Array.empty).map(_.getName).filter(_.startsWith(prefix)).toSet
+    // (query, its memo key, the stored artifact's temp-dir prefix)
+    val rows = Seq(
+      ("q80_hybrid_ann_stored", "ivf-stored", Some("graft-ivf-stored-")),
+      ("q102_bm25_stored", "postings-stored", Some("graft-postings-stored-")),
+      ("q104_cross_span_scrub", "spanidx-stored", Some("graft-spanidx-stored-")),
+      ("q208_lang_id_stored", "langmodel-stored", Some("graft-langmodel-stored-")),
+      ("q227_bloom_scrub", "bloom-stored", Some("graft-bloom-stored-")),
+      ("q232_phrase_stored", "positional-stored", Some("graft-positional-stored-")),
+      ("q270_media_cross_neardup", "fp-index", Some("graft-fp-index-")),
+      ("q277_cross_jaccard_stored", "jac-index", Some("graft-jac-index-")),
+      ("q286_cross_semantic", "emb-ivf", Some("graft-emb-ivf-")),
+      ("q290_entity_link_stored", "er-registry", Some("graft-er-registry-")),
+      ("q39_dedup_survivors", "verified-pairs", None),
+      ("q46_dup_clusters", "verified-pairs", None),
+      ("q77_hybrid_ann", "fit16", None),
+      ("q82_subword_pack", "merges", None),
+      ("q33_sql_window", "sql-door", None))
+    for ((name, key, prefix) <- rows) withClue(s"$name: ") {
+      val q = SparkEntry.queries(name)
+      graft.clearCaches(spark)
+      assert(SessionMemo.keys(spark) === Set.empty[String])
+      q(spark, sfDir)
+      assert(SessionMemo.keys(spark).contains(key))
+      val built = prefix.map(dirs)
+      val builds = SessionMemo.builds
+      q(spark, sfDir) // same session and data dir: every memo is reused
+      assert(SessionMemo.builds === builds, "a second call must build nothing")
+      assert(prefix.map(dirs) === built)
+      graft.clearCaches(spark)
+      assert(!SessionMemo.keys(spark).contains(key))
+      q(spark, sfDir)
+      assert(SessionMemo.keys(spark).contains(key),
+        "after clearCaches, the next call must build again")
+      for (p <- prefix; b <- built)
+        assert((dirs(p) -- b).size === 1,
+          s"after clearCaches, $name must fit and save a new stored artifact")
+    }
     graft.clearCaches(spark)
-    q277(spark, sfDir)
-    val built = jacDirs
-    q277(spark, sfDir) // same session and data dir: the stored index is reused
-    assert(jacDirs === built)
-    graft.clearCaches(spark)
-    q277(spark, sfDir)
-    assert((jacDirs -- built).size === 1,
-      "after clearCaches, q277 must fit and save a new stored index")
+  }
+
+  test("q227/q232: a warm call opens its stored artifact and starts no job") {
+    for (name <- Seq("q227_bloom_scrub", "q232_phrase_stored")) {
+      val q = SparkEntry.queries(name)
+      q(spark, sfDir)
+      assert(jobsStartedBy(q(spark, sfDir))._2 === 0, name)
+    }
   }
 
   test("int64-envelope widening: q180/q202/q242/kappa stay exact past 2^63 on planted overflow fixtures (the q293 class, r20 sweep)") {
