@@ -13,11 +13,20 @@ import graft.catalog.DataDictionary
   * (`sql2ra/functionality.py:37-132`); `sqlDistinct` reproduces that
   * implicit-set-semantics layer for parity tests, while `sql` is full
   * Spark SQL.
+  *
+  * An Engine is a snapshot of its data dictionary's files as they were
+  * when it was constructed. Each relation whose optimizer size estimate
+  * is at most the session's `spark.sql.autoBroadcastJoinThreshold` is
+  * held in Spark's columnar cache as one partition (filled by the first
+  * query that reads it), so a door query over small relations runs as
+  * one job of one task; larger relations are scanned from their files
+  * ([[DataDictionary.register]]). To see rewritten files, construct a
+  * new Engine: it drops the cached copies of the old ones first.
   */
 final class Engine(val spark: SparkSession, dd: DataDictionary,
                    dataDir: String, format: String = "parquet") {
 
-  dd.register(spark, dataDir, format)
+  private val inMemory = dd.register(spark, dataDir, format)
 
   /** Full Spark SQL over the registered dd views. */
   def sql(query: String): DataFrame = spark.sql(query)
@@ -37,4 +46,10 @@ final class Engine(val spark: SparkSession, dd: DataDictionary,
     * onto the same [[Relation]] combinators [[scan]] feeds.
     */
   def ra(query: String): DataFrame = RaParser.parse(query, scan).toDF
+
+  /** Free the relations this Engine holds in memory. The cache matches by
+    * plan, so this frees them for any Engine over the same files too. The
+    * views stay registered and scan their files from then on.
+    */
+  def uncache(): Unit = inMemory.foreach(_.unpersist())
 }

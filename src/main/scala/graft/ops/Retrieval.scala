@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Lexical retrieval over a document corpus — BM25 ranking of corpus
   * documents against a (small) query set.
@@ -116,7 +117,7 @@ object Retrieval {
     * THIS function being fed identical (tf, df, corpus constant) inputs.
     * The corpus constants `nDocs` and `avgdl` are columns: bm25TopK's
     * come from its lazy stats aggregate (joined onto `df_`), a probe's
-    * are the stored index's literals.
+    * are the stored index's values carried on its query-term rows.
     */
   private def scoreBm25(tf: DataFrame, df_ : DataFrame, qTerms: DataFrame,
                         nDocs: Column, avgdl: Column, topK: Int,
@@ -347,10 +348,10 @@ object Retrieval {
     * evaluated twice). df is an aggregate of the |query vocab|-bounded
     * surviving postings (identical to bm25TopK's — df counts docs PER
     * TERM, and restricting by term before counting changes nothing),
-    * the corpus constants are the index's literals, and the scoring tail
-    * is the SHARED [[scoreBm25]]. Result: byte-identical to
-    * `bm25TopK(corpus, queries)` with the corpus pass replaced by an
-    * indexed read.
+    * the corpus constants are the index's, carried on the query-term rows,
+    * and the scoring tail is the SHARED [[scoreBm25]]. Result:
+    * byte-identical to `bm25TopK(corpus, queries)` with the corpus pass
+    * replaced by an indexed read.
     */
   def probePostings(index: PostingsIndex, queries: DataFrame,
                     queryId: String = "query_id",
@@ -364,8 +365,13 @@ object Retrieval {
       explode(array_distinct(TextOps.tokens(col(queryTextCol)))).as("term"))
     val qRows = qTermPlan.collect()
     val spark = index.postings.sparkSession
+    // the corpus constants ride the query-term rows as data: a literal is
+    // compiled into the generated code, so every index size would compile
+    // its own classes, and a separate one-row relation costs a broadcast
     val qTerms = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qTermPlan.schema)
+      java.util.Arrays.asList(qRows.map(r => Row(r.get(0), r.get(1),
+        index.nDocs.toDouble, index.avgdl)): _*),
+      qTermPlan.schema.add("n_docs", DoubleType).add("avgdl", DoubleType))
     val termList = qRows.iterator.map(_.getString(1)).distinct.toSeq
     val tf = index.postings
       .filter(col("term").isin(termList: _*))
@@ -374,8 +380,7 @@ object Retrieval {
         col("dlen").cast("double").as("dlen"))
     val df_ = tf.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
-    scoreBm25(tf, df_, qTerms, lit(index.nDocs.toDouble), lit(index.avgdl),
-        topK, k1, b)
+    scoreBm25(tf, df_, qTerms, col("n_docs"), col("avgdl"), topK, k1, b)
       .select(col("query_id"), col("rnk"), col("d_id").as("doc_id"),
         col("bm25"))
   }

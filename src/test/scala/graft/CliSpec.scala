@@ -52,8 +52,7 @@ class CliSpec extends SparkSpec {
   }
 
   test(".tbl ingestion: pipe-separated, headerless, trailing separator, dd casts") {
-    val dir = Files.createTempDirectory("graft-tbl").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir("graft-tbl"))
     // dbgen line shape: trailing `|` creates a phantom empty last field
     Files.writeString(dir.toPath.resolve("Serves.tbl"),
       """Dominos|cheese|7.95

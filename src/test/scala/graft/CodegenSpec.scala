@@ -27,7 +27,7 @@ class CodegenSpec extends SparkSpec {
   }
 
   test("codegen cache: a second AvailableNow run of a stateless stream compiles nothing") {
-    val root = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    val root = tempDir("graft-codegen")
     val in = s"$root/in"
     Seq((1L, "a b"), (2L, "c"), (3L, "d e f")).toDF("id", "s").coalesce(1)
       .write.parquet(in)

@@ -375,7 +375,7 @@ class MultimodalSpec extends SparkSpec {
       .toDF("media_id", "content")
     val batch = Seq((2L, gray(7)), (12L, wav(5)), (3L, gray(200)))
       .toDF("media_id", "content")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fpidx").toString
+    val dir = tempDir("graft-fpidx")
     Multimodal.buildFingerprintIndex(base).save(dir)
     val idx = Multimodal.loadFingerprintIndex(spark, dir)
     // the junk row is in the index with NULL hash and never pairs

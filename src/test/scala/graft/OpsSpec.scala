@@ -104,7 +104,7 @@ class OpsSpec extends SparkSpec {
     // save→load round-trips, then scrubbing the batch against the
     // EXTENDED histogram cuts the lines the batch itself pushed over
     // the bar (nav df=3, promo df=2 at minDf=2) but not h's nav
-    val dir = java.nio.file.Files.createTempDirectory("graft-bp").toString
+    val dir = tempDir("graft-bp")
     ext.save(dir)
     val loaded = Dedup.loadBoilerplateIndex(spark, dir)
     val out = Dedup.stripWithBoilerplateIndex(loaded, batch,
@@ -604,7 +604,7 @@ class OpsSpec extends SparkSpec {
     val emb = rows.toDF("vec_id", "embedding")
     val queries = emb.filter($"vec_id" % 20 === 0)
     val idx = Similarity.fitIvf(emb, nlist = 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     idx.save(dir)
     val loaded = Similarity.loadIvf(spark, dir)
     assert((loaded.nlist, loaded.dim, loaded.scheme)
@@ -622,7 +622,7 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.probeIvf(stale, emb.filter($"vec_id" === 1), 3)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stale").toString
+    val dir = tempDir("graft-ivf-stale")
     stale.save(dir)
     val e = intercept[IllegalArgumentException] {
       Similarity.loadIvf(spark, dir)
@@ -783,8 +783,7 @@ class OpsSpec extends SparkSpec {
       (for { (qi, qv) <- qs; (bi, bv) <- bs if cos(qv, bv) >= thr }
         yield (qi, bi)).toSet
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xsem").toString
+    val dir = tempDir("graft-xsem")
     Similarity.fitIvf(base, nlist = 10).save(dir)
     val idx = Similarity.loadIvf(spark, dir)
     val expected = brute(base, batch, 0.9)
@@ -1043,7 +1042,7 @@ class OpsSpec extends SparkSpec {
     val emb = rows.toDF("vec_id", "embedding")
     val queries = emb.filter($"vec_id" % 20 === 0)
     val idx = Similarity.fitPq(emb, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = tempDir("graft-pq")
     idx.save(dir)
     val loaded = Similarity.loadPq(spark, dir)
     assert((loaded.m, loaded.ksub, loaded.dim, loaded.scheme)
@@ -1067,7 +1066,7 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.encodePqBatch(stale, emb.limit(1))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-stale").toString
+    val dir = tempDir("graft-pq-stale")
     stale.save(dir)
     val e = intercept[IllegalArgumentException](Similarity.loadPq(spark, dir))
     assert(e.getMessage.contains("scheme"))
@@ -1135,7 +1134,7 @@ class OpsSpec extends SparkSpec {
     val idx = Similarity.fitIvfPq(emb, nlist = 10, m = 8, ksub = 16)
     // the inverted file carries codes + routing, NEVER vectors
     assert(idx.file.columns.toSet === Set("id", "cluster", "code", "rnorm"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("graft-ivfpq")
     idx.save(dir)
     val loaded = Similarity.loadIvfPq(spark, dir)
     assert((loaded.nlist, loaded.m, loaded.ksub, loaded.dim, loaded.scheme)
@@ -1149,7 +1148,7 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.probeIvfPq(stale, emb, queries, 3)
     }
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ivfpq-s").toString
+    val dir2 = tempDir("graft-ivfpq-s")
     stale.save(dir2)
     val e = intercept[IllegalArgumentException](Similarity.loadIvfPq(spark, dir2))
     assert(e.getMessage.contains("scheme"))
@@ -1546,7 +1545,7 @@ class OpsSpec extends SparkSpec {
       .toDF("id", "text")
     val batch = Seq((11L, mutated), (12L, (100 to 160).map(i => s"z$i").mkString(" ")))
       .toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-index").toString
+    val dir = tempDir("graft-index")
     val built = Dedup.buildIndex(base, "id", "text")
     built.save(dir)
     val loaded = Dedup.loadIndex(spark, dir)
@@ -1618,7 +1617,7 @@ class OpsSpec extends SparkSpec {
       graft.streaming.DocumentStreams.flagAgainstBaseIndexed(base, stale)
     }
     // load-time guard: a stored v1 index is rejected before any probe
-    val dir = java.nio.file.Files.createTempDirectory("graft-stale-idx").toString
+    val dir = tempDir("graft-stale-idx")
     stale.save(dir)
     intercept[IllegalArgumentException] {
       Dedup.loadIndex(spark, dir)
@@ -1689,7 +1688,7 @@ class OpsSpec extends SparkSpec {
   test("exportShards round-trips: per-shard dirs, deterministic in-file order") {
     val docs = (1 to 60).map(i => (i.toLong, s"export doc $i body words"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
+    val dir = tempDir("graft-export")
     try {
       TextOps.exportShards(docs, "doc_id", "text", nShards = 3, dir)
       // one directory per non-empty shard, hive-style
@@ -1856,16 +1855,14 @@ class OpsSpec extends SparkSpec {
       (21L, 0L, 0L, "q r s t u v w"),
       (22L, 0L, 0L, "n1 n2 n3 n4 n1 n2 n3 n4")))
     // stored lifecycle: width rides the meta, probe equals in-memory
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-spanidx").toString
+    val dir = tempDir("graft-spanidx")
     idx.save(dir)
     val loaded = Dedup.loadSpanIndex(spark, dir)
     assert((loaded.window, loaded.scheme) === (4, Dedup.SpanIndex.Scheme))
     assert(Dedup.crossRepeatedSpans(batch, loaded, "doc_id", "text")
       .as[(Long, Int, Int)].collect().toSet === spans)
     // stale scheme: loud at load AND at probe
-    val staleDir = java.nio.file.Files
-      .createTempDirectory("graft-spanidx-stale").toString
+    val staleDir = tempDir("graft-spanidx-stale")
     idx.copy(scheme = 999).save(staleDir)
     assert(intercept[IllegalArgumentException] {
       Dedup.loadSpanIndex(spark, staleDir)
@@ -1908,8 +1905,7 @@ class OpsSpec extends SparkSpec {
     assert(idx.sumDlen === 32L, "5+6+4+6+5+6 tokens across the six docs")
     assert(rows(ops.Retrieval.probePostings(idx, queries, topK = 4))
       === direct, "in-memory probe must equal the direct corpus scan")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-postings").toString
+    val dir = tempDir("graft-postings")
     idx.save(dir)
     val loaded = ops.Retrieval.loadPostings(spark, dir)
     assert((loaded.nDocs, loaded.sumDlen, loaded.scheme)
@@ -1918,10 +1914,30 @@ class OpsSpec extends SparkSpec {
       === direct, "stored probe must equal the direct corpus scan")
   }
 
+  test("PostingsIndex: probing a second index of another size compiles no class") {
+    // 12 distinct query terms, so the probe's term filter is an InSet
+    val queries = Seq((100L, "apple banana cherry durian elderberry fig"),
+      (101L, "grape words here only other totally")).toDF("query_id", "qtext")
+    def stored(docs: org.apache.spark.sql.DataFrame, prefix: String) = {
+      val dir = tempDir(prefix)
+      ops.Retrieval.fitPostings(docs).save(dir)
+      ops.Retrieval.loadPostings(spark, dir)
+    }
+    val small = stored(postingsCorpus, "graft-postings-small")
+    val large = stored(postingsCorpus.union(Seq((7L, "apple fig words"),
+      (8L, "cherry cherry banana grape here")).toDF("doc_id", "text")),
+      "graft-postings-large")
+    assert((small.nDocs, small.avgdl) !== ((large.nDocs, large.avgdl)))
+    ops.Retrieval.probePostings(small, queries, topK = 4).collect()
+    val (rows, compiled) = classesCompiledBy(
+      ops.Retrieval.probePostings(large, queries, topK = 4).collect())
+    assert(rows.nonEmpty)
+    assert(compiled === 0L, "the index's constants must not be compiled in")
+  }
+
   test("PostingsIndex: stale tokenizer scheme is rejected at load") {
     val idx = ops.Retrieval.fitPostings(postingsCorpus).copy(scheme = 999)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-postings-stale").toString
+    val dir = tempDir("graft-postings-stale")
     idx.save(dir)
     val e = intercept[IllegalArgumentException] {
       ops.Retrieval.loadPostings(spark, dir)
@@ -1931,8 +1947,7 @@ class OpsSpec extends SparkSpec {
 
   test("PostingsIndex: a save that fails partway leaves a directory load refuses") {
     val idx = ops.Retrieval.fitPostings(postingsCorpus)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-postings-torn").toString
+    val dir = tempDir("graft-postings-torn")
     idx.save(dir)
     assert(ops.Retrieval.loadPostings(spark, dir).nDocs === idx.nDocs)
     // the new postings expression throws mid-write, over a good index
@@ -1951,13 +1966,11 @@ class OpsSpec extends SparkSpec {
 
   test("PostingsIndex: postings without a manifest and the old meta/ layout are refused") {
     val idx = ops.Retrieval.fitPostings(postingsCorpus)
-    val noManifest = java.nio.file.Files
-      .createTempDirectory("graft-postings-bare").toString
+    val noManifest = tempDir("graft-postings-bare")
     idx.save(noManifest)
     assert(new java.io.File(noManifest, "manifest.json").delete())
     // the layout older builds wrote: postings/ next to a meta/ table
-    val oldLayout = java.nio.file.Files
-      .createTempDirectory("graft-postings-meta").toString
+    val oldLayout = tempDir("graft-postings-meta")
     idx.postings.write.parquet(s"$oldLayout/postings")
     Seq((idx.nDocs, idx.sumDlen, ops.Retrieval.PostingsIndex.Scheme))
       .toDF("n_docs", "sum_dlen", "scheme")
@@ -1972,8 +1985,7 @@ class OpsSpec extends SparkSpec {
 
   test("loadPostings starts no Spark job") {
     val idx = ops.Retrieval.fitPostings(postingsCorpus)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-postings-jobs").toString
+    val dir = tempDir("graft-postings-jobs")
     idx.save(dir)
     val (loaded, jobs) = jobsStartedBy(ops.Retrieval.loadPostings(spark, dir))
     assert(jobs === 0, "the manifest is read on the driver")
@@ -2112,7 +2124,7 @@ class OpsSpec extends SparkSpec {
   }
 
   private def storeDir(kind: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-store-$kind").toString
+    tempDir(s"graft-store-$kind")
 
   /** Every row of the stored relations, in a comparable form. */
   private def storedRows(rels: Seq[org.apache.spark.sql.DataFrame]): Seq[Seq[String]] =
@@ -2291,7 +2303,7 @@ class OpsSpec extends SparkSpec {
   test("termFreqs lifecycle: save→load round-trips, extend ≡ full rebuild") {
     val base = Seq((1L, "aa bb aa"), (2L, "bb cc")).toDF("doc_id", "text")
     val batch = Seq((3L, "cc dd")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tf").toString
+    val dir = tempDir("graft-tf")
     TextOps.saveTermFreqs(TextOps.termFreqs(base, "text"), dir)
     val loaded = TextOps.loadTermFreqs(spark, dir)
     def toMap(f: org.apache.spark.sql.DataFrame) =
@@ -2304,7 +2316,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("termFreqs: stale tokenizer scheme is rejected at load") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tf2").toString
+    val dir = tempDir("graft-tf2")
     TextOps.saveTermFreqs(
       TextOps.termFreqs(Seq((1L, "x")).toDF("doc_id", "text"), "text"), dir)
     // overwrite the manifest with a bogus scheme
@@ -2570,7 +2582,7 @@ class OpsSpec extends SparkSpec {
     val merges = TextOps.bpeMerges(docs, "text", numMerges = 6)
     val inSession = merges.orderBy("rank")
       .select("a", "b").as[(String, String)].collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-merges").toString
+    val dir = tempDir("graft-merges")
     TextOps.saveMerges(merges, dir)
     val loaded = TextOps.loadMerges(spark, dir)
     assert(loaded === inSession)
@@ -2813,7 +2825,7 @@ class OpsSpec extends SparkSpec {
     // dense by construction: exactly numBuckets rows, every bucket present
     val buckets = m.lr.select("bucket").as[Long].collect().sorted
     assert(buckets.toSeq === (0L until 64L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-imp").toString
+    val dir = tempDir("graft-imp")
     TextOps.saveImportanceModel(m, dir)
     val loaded = TextOps.loadImportanceModel(spark, dir)
     assert(loaded.numBuckets === 64 && loaded.alpha === 1.0)
@@ -2834,7 +2846,7 @@ class OpsSpec extends SparkSpec {
   test("importance model: stale tokenizer scheme is rejected at load") {
     val corpus = Seq((1L, "x", true), (2L, "y", false))
       .toDF("doc_id", "text", "is_t")
-    val dir = java.nio.file.Files.createTempDirectory("graft-imp2").toString
+    val dir = tempDir("graft-imp2")
     TextOps.saveImportanceModel(
       TextOps.fitImportanceModel(corpus, "text", col("is_t")), dir)
     forgeStoredScheme(dir, 99)
@@ -3494,8 +3506,7 @@ class OpsSpec extends SparkSpec {
         if j >= thr
       } yield (qi, bi, inter, j)).toSet
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("jac-idx-spec").toString
+    val dir = tempDir("jac-idx-spec")
     Dedup.buildJaccardIndex(base, "id", "sh", thresholdBp = 7000L)
       .save(dir)
     val idx = Dedup.loadJaccardIndex(spark, dir)
@@ -3628,8 +3639,7 @@ class OpsSpec extends SparkSpec {
       (10L, "555-bravo-777"), (11L, "555-bravo-77"), // entity {10,11}
       (20L, "999-delta-888")                          // singleton
     ).toDF("rec_id", "name")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-er-spec").toString
+    val dir = tempDir("graft-er-spec")
     Entity.buildRegistry(base, "rec_id", "name", threshold = 0.9,
       prefixLen = 3).save(dir)
     val reg = Entity.loadRegistry(spark, dir)
@@ -3750,8 +3760,7 @@ class OpsSpec extends SparkSpec {
     assert(pairs(idx).exists(_._2 === 21L), "survivor stopped answering")
     // posting shrink is PHYSICAL after save (merge-time compaction):
     // the stored relations hold zero rows for removed ids
-    val dir = java.nio.file.Files
-      .createTempDirectory("jac-rm-spec").toString
+    val dir = tempDir("jac-rm-spec")
     idx.save(dir)
     val loaded = Dedup.loadJaccardIndex(spark, dir)
     for ((rel, name) <- Seq((loaded.tokens, "tokens"),
@@ -4148,8 +4157,7 @@ class OpsSpec extends SparkSpec {
     // Pin the loud, typed failure so the divergence can never silently
     // drift into wrong answers...
     import graft.ops.Snapshot
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-merge-spec-").toString
+    val wh = tempDir("graft-merge-spec-")
     spark.sql("DROP TABLE IF EXISTS merge_tgt")
     spark.sql("CREATE TABLE merge_tgt (id BIGINT, v BIGINT) " +
       s"USING parquet LOCATION '$wh/tgt'")
@@ -4663,7 +4671,7 @@ class OpsSpec extends SparkSpec {
       (1L, true, "alpha beta"), (2L, false, "gamma delta gamma"))
       .toDF("doc_id", "is_t", "text")
     val m = Classify.fitNbClassifier(docs, "text", col("is_t"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-nb-").toString
+    val dir = tempDir("graft-nb-")
     Classify.saveNbModel(m, dir)
     val loaded = Classify.loadNbModel(spark, dir)
     assert(loaded.bias === m.bias && loaded.defaultW === m.defaultW &&
@@ -4708,7 +4716,7 @@ class OpsSpec extends SparkSpec {
         "k-v1")).as[(String, Double)].collect().toMap
     assert(est1 === refit)
     // save -> load round-trips estimates and meta
-    val dir = java.nio.file.Files.createTempDirectory("graft-card-").toString
+    val dir = tempDir("graft-card-")
     Sketch.saveCardinality(ext, dir)
     val loaded = Sketch.loadCardinality(spark, dir)
     assert(loaded.lgK === ext.lgK && loaded.keyScheme === "k-v1")
@@ -4823,7 +4831,7 @@ class OpsSpec extends SparkSpec {
       assert(java.util.Arrays.equals(bytes, refitB(g)), s"group $g")
     }
     // save -> load round-trips estimates and meta
-    val dir = java.nio.file.Files.createTempDirectory("graft-freq-").toString
+    val dir = tempDir("graft-freq-")
     Sketch.saveFreq(ext, dir)
     val loaded = Sketch.loadFreq(spark, dir)
     assert(loaded.eps === ext.eps && loaded.confidence === ext.confidence &&
@@ -5919,8 +5927,7 @@ class OpsSpec extends SparkSpec {
     val docs = Seq((1L, "xxx yyy xxx"), (2L, "www zzz zzz"))
       .toDF("id", "t")
     val model = TextOps.fitLangProfiles(train, "lang", "t", profileK = 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory("langid-model").toString
+    val dir = tempDir("langid-model")
     TextOps.saveLangProfiles(model, dir)
     val reloaded = TextOps.loadLangProfiles(spark, dir)
     val a = TextOps.langIdScore(docs, model, "id", "t", docM = 8)

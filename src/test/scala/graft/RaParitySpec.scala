@@ -143,6 +143,49 @@ class RaParitySpec extends SparkSpec {
       s"our pipeline must be a no-op on Catalyst's fixed point:\n$base\nvs\n$reApplied")
   }
 
+  // ── door layout: small relations are one in-memory partition ──────────
+
+  /** One σ/π query through each door: `sqlDistinct`, `ra` and `scan`. */
+  private def doors(eng: graft.api.Engine): Seq[(String, DataFrame)] = Seq(
+    "sqlDistinct" -> eng.sqlDistinct(
+      "SELECT name FROM Person WHERE gender = 'female'"),
+    "ra" -> eng.ra("""\project_{name} \select_{gender='female'} Person;"""),
+    "scan" -> eng.scan("Person").select(col("gender") === "female")
+      .project("name").toDF.distinct())
+
+  test("a σ/π query over a small relation runs as one job and plans no exchange") {
+    val eng = new graft.api.Engine(spark, pizzaDd, pizzaDir, format = "csv")
+    eng.scan("Person").toDF.collect() // fills the cache (its own job)
+    for ((door, df) <- doors(eng)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$door:\n$plan")
+      assert(plan.contains("In-memory table Person"), s"$door:\n$plan")
+      val (rows, jobs) = jobsStartedBy(df.collect())
+      assert(rows.map(_.getString(0)).toSet === Set("Amy", "Fay", "Hil"), door)
+      assert(jobs === 1, s"$door started $jobs jobs")
+    }
+  }
+
+  test("with the broadcast threshold off, the same query scans its file through an exchange") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      val eng = new graft.api.Engine(spark, pizzaDd, pizzaDir, format = "csv")
+      for ((door, df) <- doors(eng)) {
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("FileScan csv"), s"$door:\n$plan")
+        assert(plan.contains("Exchange hashpartitioning"), s"$door:\n$plan")
+        assert(df.collect().map(_.getString(0)).toSet ===
+          Set("Amy", "Fay", "Hil"), door)
+      }
+    } finally {
+      spark.conf.set(key, saved)
+      // re-register the session's pizza views with the default layout
+      new graft.api.Engine(spark, pizzaDd, pizzaDir, format = "csv")
+    }
+  }
+
   // ── the injected rules on the contract ─────────────────────────────────
 
   private val injected = Seq(RaRules.PushDownSelections,

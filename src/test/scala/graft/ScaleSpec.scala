@@ -211,8 +211,7 @@ class ScaleSpec extends SparkSpec {
         "Exchange hashpartitioning".r.findAllIn(
           Dedup.crossNearDupIndexed(probe, idx2, "doc_id", "text")
             .queryExecution.executedPlan.toString).size
-      val plainDir = java.nio.file.Files
-        .createTempDirectory("gt-idx-plain").toString
+      val plainDir = tempDir("gt-idx-plain")
       Dedup.buildIndex(base, "doc_id", "text").save(plainDir)
       val nPlain = nExchanges(Dedup.loadIndex(spark, plainDir))
       val nBucketed = nExchanges(idx)
@@ -272,7 +271,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("table: one schema inference per file version; clearCaches forgets it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-schemas").toString
+    val dir = tempDir("graft-schemas")
     Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1)
       .write.parquet(s"$dir/t.parquet")
     graft.clearCaches(spark)
@@ -295,7 +294,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes partitions at plan time") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tmp = tempDir("graft-part")
     table(spark, sfDir, "events")
       .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     val one = spark.read.parquet(tmp).filter(col("event_type") === "click")
@@ -311,7 +310,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("tagged-JSON ingestion (the reference's MR wire format) parses and casts") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tagged").toFile
+    val tmp = new java.io.File(tempDir("graft-tagged"))
     val f = new java.io.File(tmp, "Serves.json")
     val w = new java.io.PrintWriter(f)
     w.println("Serves\t{\"Serves.pizzeria\": \"Dominos\", \"Serves.pizza\": \"mushroom\", \"Serves.price\": 8.5}")
@@ -326,7 +325,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("JSON-lines ingestion through the dd casts types like CSV does") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-json").toFile
+    val tmp = new java.io.File(tempDir("graft-json"))
     val f = new java.io.File(tmp, "Serves.json")
     val w = new java.io.PrintWriter(f)
     w.println("""{"pizzeria": "Dominos", "pizza": "mushroom", "price": 8.5}""")
@@ -340,7 +339,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("ORC ingestion through the dd casts types and pushes filters") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toFile
+    val tmp = new java.io.File(tempDir("graft-orc"))
     try {
       Seq(("Dominos", "mushroom", 8.5), ("Corleone", "cheese", 7.75))
         .toDF("pizzeria", "pizza", "price")
@@ -364,7 +363,7 @@ class ScaleSpec extends SparkSpec {
     import org.apache.avro.{Schema, SchemaBuilder}
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-avro").toFile
+    val tmp = new java.io.File(tempDir("graft-avro"))
     def write(path: java.io.File, schema: Schema,
               rows: Seq[Map[String, Any]]): Unit = {
       val w = new DataFileWriter[GenericRecord](
@@ -414,7 +413,7 @@ class ScaleSpec extends SparkSpec {
       // instead of an all-null column
       val lacking = SchemaBuilder.record("Serves").fields()
         .requiredString("pizzeria").endRecord()
-      val tmp2 = java.nio.file.Files.createTempDirectory("graft-avro2").toFile
+      val tmp2 = new java.io.File(tempDir("graft-avro2"))
       write(new java.io.File(tmp2, "Serves.avro"), lacking,
         Seq(Map("pizzeria" -> "X")))
       val e = intercept[Exception] {
@@ -605,6 +604,62 @@ class ScaleSpec extends SparkSpec {
     graft.clearCaches(spark)
   }
 
+  /** Copy the sf0.001 fixture tables into a new directory. */
+  private def fixtureCopy(prefix: String): String = {
+    val dir = tempDir(prefix)
+    for (f <- new java.io.File(sfDir).listFiles if f.getName.endsWith(".parquet"))
+      java.nio.file.Files.copy(f.toPath, new java.io.File(dir, f.getName).toPath)
+    dir
+  }
+
+  /** Replace the parquet file at `path` with `df`'s rows the way another
+    * program would: a file copy, not a Spark write, which would refresh
+    * every cached plan reading the path itself. */
+  private def rewrite(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val out = tempDir("graft-rewrite")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles.filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("an Engine is a snapshot: a relation file rewritten between two Engines is read anew") {
+    val dir = fixtureCopy("graft-engine-snap")
+    def urgent(eng: graft.api.Engine) = eng.sql(
+      "SELECT count(*) FROM orders WHERE o_orderpriority = '1-URGENT'").head().getLong(0)
+    val dd = graft.catalog.DataDictionary.fromJson(new String(
+      getClass.getResourceAsStream("/tpch_dd.json").readAllBytes(), "UTF-8"))
+    val first = new graft.api.Engine(spark, dd, dir)
+    assert(spark.catalog.isCached("orders"), "sf0.001 orders is a small relation")
+    assert(urgent(first) > 0)
+    rewrite(table(spark, dir, "orders").filter(col("o_orderpriority") =!= "1-URGENT"),
+      s"$dir/orders.parquet")
+    assert(urgent(new graft.api.Engine(spark, dd, dir)) === 0,
+      "a new Engine must not serve the old file's cached rows")
+  }
+
+  test("sql door: a relation file rewritten between two calls is read anew") {
+    val dir = fixtureCopy("graft-door-snap")
+    val q31 = SparkEntry.queries("q31_sql_agg")
+    def priorities = q31(spark, dir).collect().map(_.getString(0)).toSet
+    assert(priorities.contains("1-URGENT"))
+    rewrite(table(spark, dir, "orders").filter(col("o_orderpriority") =!= "1-URGENT"),
+      s"$dir/orders.parquet")
+    assert(!priorities.contains("1-URGENT"),
+      "the SQL door must not serve the old file's cached rows")
+    graft.clearCaches(spark)
+  }
+
+  test("clearCaches frees the SQL door's in-memory relations") {
+    val q31 = SparkEntry.queries("q31_sql_agg")
+    q31(spark, sfDir).collect()
+    val views = Seq("orders", "lineitem", "customer", "nation", "documents")
+    assert(views.forall(spark.catalog.isCached), "the door holds small relations in memory")
+    graft.clearCaches(spark)
+    assert(views.filter(spark.catalog.isCached).isEmpty,
+      "clearCaches must leave no cached entry behind")
+  }
+
   test("q227/q232: a warm call opens its stored artifact and starts no job") {
     for (name <- Seq("q227_bloom_scrub", "q232_phrase_stored")) {
       val q = SparkEntry.queries(name)
@@ -629,7 +684,6 @@ class ScaleSpec extends SparkSpec {
     // fixture rows and epoch-nanos cap the day span — so its shape is
     // covered by the shared-mechanism law at the end plus the oracle
     // gate at fixture scale.
-    import java.nio.file.Files
     val max = BigInt(Long.MaxValue)
 
     // --- q180 chi-square: one type, ONE hour-of-week cell, T = 2.2e7.
@@ -638,7 +692,7 @@ class ScaleSpec extends SparkSpec {
     val num180 = BigInt(167) * t180 * (BigInt(167) * t180) +
       BigInt(167) * t180 * t180
     assert(!num180.isValidLong, "q180 fixture must exceed int64")
-    val d180 = Files.createTempDirectory("graft-ovf-180").toString
+    val d180 = tempDir("graft-ovf-180")
     spark.range(t180)
       .select(lit("t").as("event_type"),
         lit(5L * 86400L * 1000000000L).as("ts"))
@@ -661,7 +715,7 @@ class ScaleSpec extends SparkSpec {
     val den202 = BigInt(12) * sumC
     assert(!den202.isValidLong && (iw * 2) > max,
       "q202 fixture must exceed int64")
-    val d202 = Files.createTempDirectory("graft-ovf-202").toString
+    val d202 = tempDir("graft-ovf-202")
     (1 to 12).map(i => (i.toLong, i.toDouble * 1e14, 0.0))
       .toDF("l_suppkey", "l_extendedprice", "l_discount")
       .write.mode("overwrite").parquet(s"$d202/lineitem.parquet")
@@ -680,7 +734,7 @@ class ScaleSpec extends SparkSpec {
     val dMag = BigInt(10800000)                  // 90000·(241−121)/... = n·120
     val den242 = BigInt(days242) * dMag * dMag
     assert(!den242.isValidLong, "q242 fixture must exceed int64")
-    val d242 = Files.createTempDirectory("graft-ovf-242").toString
+    val d242 = tempDir("graft-ovf-242")
     spark.range(days242)
       .select((col("id") * lit(86400L * 1000000000L)).as("day_ns"),
         when(col("id") % 2 === 0, lit(1)).otherwise(lit(241)).as("k"))

@@ -21,6 +21,11 @@ trait SparkSpec extends AnyFunSuite {
     graft.catalog.DataDictionary.fromFile(
       getClass.getResource("/pizza_dd.json").getPath)
 
+  /** A new temp directory, deleted at JVM exit like the program's own
+    * ([[SessionMemo.tempDir]]): a spec need not clean up after itself,
+    * and a frame still scanning the directory keeps working. */
+  def tempDir(prefix: String): String = SessionMemo.tempDir(prefix)
+
   /** Run `body` and count the Spark jobs it starts. The jobs are told
     * apart by a job group set on this thread; listener events arrive
     * asynchronously, so a marker job run afterwards flushes the bus —
