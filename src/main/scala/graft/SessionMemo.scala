@@ -6,11 +6,12 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 
 /** The one per-session memo: every value graft keeps between queries
-  * (stored indexes, the persisted pair set, the SQL-door Engine, fitted
-  * models, the parquet schemas) is held per (session, key) and rebuilt
-  * when its `version` (the data dir, a file version) changes. Replacing
-  * or clearing an entry runs its `release`. [[graft.clearCaches]] is
-  * [[clear]], so a new memo is released there by construction.
+  * (stored indexes, the persisted pair set, the SQL-door views, each
+  * Engine's in-memory relations, fitted models, the parquet schemas) is
+  * held per (session, key) and rebuilt when its `version` (the data
+  * dir, a file version, the Engine) changes. Replacing or clearing an
+  * entry runs its `release`. [[graft.clearCaches]] is [[clear]], so a
+  * new memo is released there by construction.
   *
   * A build runs under its own key's lock, not inside the map's
   * `compute`: builds nest (a stored index reads its tables through the

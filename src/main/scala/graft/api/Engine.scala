@@ -14,19 +14,43 @@ import graft.catalog.DataDictionary
   * implicit-set-semantics layer for parity tests, while `sql` is full
   * Spark SQL.
   *
-  * An Engine is a snapshot of its data dictionary's files as they were
-  * when it was constructed. Each relation whose optimizer size estimate
-  * is at most the session's `spark.sql.autoBroadcastJoinThreshold` is
-  * held in Spark's columnar cache as one partition (filled by the first
-  * query that reads it), so a door query over small relations runs as
-  * one job of one task; larger relations are scanned from their files
-  * ([[DataDictionary.register]]). To see rewritten files, construct a
-  * new Engine: it drops the cached copies of the old ones first.
+  * An Engine is a snapshot of its data dictionary. Each relation whose
+  * optimizer size estimate is at most the session's
+  * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already ships
+  * whole) is held in Spark's columnar cache as one partition: its view
+  * is `coalesce(1)` over the file, cached lazily by `cacheTable`. Its
+  * scans then report `SinglePartition`, so a distinct, or a shuffled
+  * join between two such relations, plans no exchange, and a σ/π/ρ
+  * query runs as one job of one task over in-memory batches. Larger
+  * relations stay plain file scans and read the current files.
+  *
+  * The cache is filled by the first query that reads a relation, and
+  * from then on serves the rows of that read. A new Engine never serves
+  * cached rows of a replaced file: the cache matches by plan, and a
+  * file rewritten at the same path gives the same plan, so it drops any
+  * entry for its views' plans before caching them. The session keeps
+  * one in-memory copy per view name: a later Engine registering the
+  * name, or [[graft.clearCaches]], frees it.
   */
 final class Engine(val spark: SparkSession, dd: DataDictionary,
                    dataDir: String, format: String = "parquet") {
 
-  private val inMemory = dd.register(spark, dataDir, format)
+  dd.relations.keys.foreach { rel =>
+    val df = dd.load(spark, dataDir, rel, format)
+    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    graft.SessionMemo(spark, s"engine:$rel", this,
+        (held: Option[DataFrame]) => held.foreach(_.unpersist())) {
+      if (!small) { df.createOrReplaceTempView(rel); None }
+      else {
+        val one = df.coalesce(1)
+        one.createOrReplaceTempView(rel)
+        spark.catalog.uncacheTable(rel)
+        spark.catalog.cacheTable(rel)
+        Some(one)
+      }
+    }
+  }
 
   /** Full Spark SQL over the registered dd views. */
   def sql(query: String): DataFrame = spark.sql(query)
@@ -46,10 +70,4 @@ final class Engine(val spark: SparkSession, dd: DataDictionary,
     * onto the same [[Relation]] combinators [[scan]] feeds.
     */
   def ra(query: String): DataFrame = RaParser.parse(query, scan).toDF
-
-  /** Free the relations this Engine holds in memory. The cache matches by
-    * plan, so this frees them for any Engine over the same files too. The
-    * views stay registered and scan their files from then on.
-    */
-  def uncache(): Unit = inMemory.foreach(_.unpersist())
 }

@@ -19,36 +19,12 @@ final case class DataDictionary(relations: Map[String, StructType]) {
     * dd queryable via `spark.sql`. Supported layouts: parquet (preferred),
     * ORC, Avro container files, headered CSV, JSON lines, tagged-JSON
     * (MR wire format), and TPC-H `.tbl`.
-    *
-    * A small relation, one whose optimizer size estimate is at most the
-    * session's `spark.sql.autoBroadcastJoinThreshold` (the size Spark
-    * already ships whole), is held in Spark's columnar cache as one
-    * partition: its view is `coalesce(1)` over the file, cached lazily
-    * with `cacheTable`. Its scans then report `SinglePartition`, so a
-    * distinct or a shuffled join over such relations plans no exchange
-    * and a σ/π/ρ query runs as one job of one task over in-memory
-    * batches. Any entry cached for the same plan is dropped first: a
-    * file rewritten at the same path gives the same plan, and the cache
-    * matches by plan. Larger relations stay plain file scans. Returns
-    * the views held in memory.
     */
   def register(spark: SparkSession, dataDir: String,
-               format: String = "parquet"): Seq[DataFrame] = {
-    val small = spark.sessionState.conf.autoBroadcastJoinThreshold
-    relations.keys.toSeq.flatMap { rel =>
-      val df = load(spark, dataDir, rel, format)
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes > small) {
-        df.createOrReplaceTempView(rel)
-        None
-      } else {
-        val one = df.coalesce(1)
-        one.createOrReplaceTempView(rel)
-        spark.catalog.uncacheTable(rel)
-        spark.catalog.cacheTable(rel)
-        Some(one)
-      }
+               format: String = "parquet"): Unit =
+    relations.keys.foreach { rel =>
+      load(spark, dataDir, rel, format).createOrReplaceTempView(rel)
     }
-  }
 
   def load(spark: SparkSession, dataDir: String, rel: String,
            format: String = "parquet"): DataFrame = {

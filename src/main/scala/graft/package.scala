@@ -27,26 +27,10 @@ package object graft {
     * does not list (absent, or a glob) reads plainly and fails or
     * resolves exactly as Spark's reader does.
     */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
-    fileVersion(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(files) =>
-        val settings = spark.conf.getAll.filter { case (k, _) =>
-          k.startsWith("spark.sql.parquet.") ||
-            k.startsWith("spark.sql.legacy.parquet.")
-        }
-        val schema = SessionMemo(spark, s"schema:$path", (files, settings))(
-          spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
-    }
-
-  /** The (name, size, mtime) of every file under `path`, or None when
-    * the path does not exist: a rewritten file changes it. */
-  private[graft] def fileVersion(spark: SparkSession,
-                                 path: String): Option[Seq[(String, Long, Long)]] = {
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p)) spark.read.parquet(path)
     else {
       val files = Seq.newBuilder[(String, Long, Long)]
       val it = fs.listFiles(p, true)
@@ -54,7 +38,14 @@ package object graft {
         val f = it.next()
         files += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-      Some(files.result())
+      val settings = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val version = (files.result(), settings)
+      val schema = SessionMemo(spark, s"schema:$path", version)(
+        spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
     }
   }
 
@@ -110,7 +101,8 @@ package object graft {
 
   /** Release everything graft memoizes against `spark`: every
     * [[SessionMemo]] entry (stored indexes, the persisted pair set,
-    * fitted models, the SQL-door Engine and the [[readParquet]] schemas).
+    * fitted models, the SQL-door views, each Engine's in-memory
+    * relations and the [[readParquet]] schemas).
     * Call at teardown (Bench/Verify do) or between corpora on a
     * long-lived session; queries re-derive lazily on next use. Stored
     * artifacts' directories are deleted at JVM exit.

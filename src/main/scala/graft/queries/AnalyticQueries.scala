@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{cents, dec, events, table}
-import graft.api.Engine
 import graft.catalog.DataDictionary
 
 /** Analytic-breadth correctness queries: sorts/top-k, window functions,
@@ -503,31 +502,42 @@ object AnalyticQueries {
     * parse/analyze/optimize all Catalyst (the reference needs
     * sql2ra+raopt+ra2spark for this, SURVEY §3.1).
     *
-    * The Engine is memoized per session: constructing one re-registers
-    * all 8 dd views and re-reads parquet footers, which tripled the
-    * apparent cost of every SQL-door query when done per call (round-2
-    * verdict #5: q33 at 6.7 s vs 0.4 s for the identical q17). The
-    * version is the data dir and every relation file's (name, size,
-    * mtime): the Engine holds small relations in memory, so a dir
-    * change or a rewritten file builds a new one, and replacing or
-    * clearing the entry frees the old one's cached relations.
+    * The views are plain file scans, not a [[graft.api.Engine]]'s
+    * in-memory relations: a cache fill reads a relation whole, where a
+    * file scan prunes columns (q56 never reads `text` or `embedding`)
+    * and pushes filters into the reader (q54's date range), and those
+    * are the plans the contract's queries have at any scale.
+    *
+    * The views are registered once per session and version, because
+    * building them re-reads parquet footers, which tripled the apparent
+    * cost of every SQL-door query when done per call (round-2 verdict
+    * #5: q33 at 6.7 s vs 0.4 s for the identical q17). The version is
+    * the data dir and each relation path's (size, mtime): a DataFrame
+    * keeps the file listing it was built from, so a file rewritten in
+    * place (or a directory whose files were replaced) registers anew.
+    * One stat per path costs 0.1–0.2 ms for all ten at sf0.1, where
+    * listing every file under them took 23–30 ms a call.
     */
   private def sqlDoor(s: SparkSession, dir: String, query: String): DataFrame = {
+    val stamps = (fullDd.relations.keys.toSeq :+ "events").map { r =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$r.parquet")
+      scala.util.Try(p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)).toOption.map(f => (f.getLen, f.getModificationTime))
+    }
     // events joins the catalog through the nanos-aware reader (see
     // pipelineDd scaladoc) — same view name, SQL can't tell. BUILDING
     // the DataFrame reads parquet footers, so it is memoized with the
-    // Engine (round-2 verdict #5: per-call footer IO tripled SQL-door
+    // views (round-2 verdict #5: per-call footer IO tripled SQL-door
     // cost)…
-    val files = (fullDd.relations.keys.toSeq :+ "events")
-      .map(r => graft.fileVersion(s, s"$dir/$r.parquet"))
-    val (eng, events) = graft.SessionMemo(s, "sql-door", (dir, files),
-        (e: (Engine, DataFrame)) => e._1.uncache())(
-      (new Engine(s, fullDd, dir, format = "parquet"), graft.events(s, dir)))
+    val events = graft.SessionMemo(s, "sql-door", (dir, stamps)) {
+      fullDd.register(s, dir, "parquet")
+      graft.events(s, dir)
+    }
     // …but RE-BINDING the cached plan is IO-free, so do that every call:
     // a caller that dropped or shadowed the session's `events` view
     // would otherwise silently resolve against the wrong view forever.
     events.createOrReplaceTempView("events")
-    eng.sql(query)
+    s.sql(query)
   }
 
   def q31(s: SparkSession, dir: String): DataFrame = sqlDoor(s, dir,

@@ -623,19 +623,32 @@ class ScaleSpec extends SparkSpec {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  private lazy val tpchDd = graft.catalog.DataDictionary.fromJson(new String(
+    getClass.getResourceAsStream("/tpch_dd.json").readAllBytes(), "UTF-8"))
+
   test("an Engine is a snapshot: a relation file rewritten between two Engines is read anew") {
     val dir = fixtureCopy("graft-engine-snap")
     def urgent(eng: graft.api.Engine) = eng.sql(
       "SELECT count(*) FROM orders WHERE o_orderpriority = '1-URGENT'").head().getLong(0)
-    val dd = graft.catalog.DataDictionary.fromJson(new String(
-      getClass.getResourceAsStream("/tpch_dd.json").readAllBytes(), "UTF-8"))
-    val first = new graft.api.Engine(spark, dd, dir)
+    val first = new graft.api.Engine(spark, tpchDd, dir)
     assert(spark.catalog.isCached("orders"), "sf0.001 orders is a small relation")
     assert(urgent(first) > 0)
     rewrite(table(spark, dir, "orders").filter(col("o_orderpriority") =!= "1-URGENT"),
       s"$dir/orders.parquet")
-    assert(urgent(new graft.api.Engine(spark, dd, dir)) === 0,
+    assert(urgent(new graft.api.Engine(spark, tpchDd, dir)) === 0,
       "a new Engine must not serve the old file's cached rows")
+    graft.clearCaches(spark)
+  }
+
+  test("an Engine over other files frees the previous Engine's in-memory copy") {
+    new graft.api.Engine(spark, tpchDd, fixtureCopy("graft-engine-old"))
+    val old = spark.table("orders")
+    old.count()
+    assert(old.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    new graft.api.Engine(spark, tpchDd, sfDir)
+    assert(old.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "the replaced view's in-memory copy must be freed")
+    graft.clearCaches(spark)
   }
 
   test("sql door: a relation file rewritten between two calls is read anew") {
@@ -646,15 +659,15 @@ class ScaleSpec extends SparkSpec {
     rewrite(table(spark, dir, "orders").filter(col("o_orderpriority") =!= "1-URGENT"),
       s"$dir/orders.parquet")
     assert(!priorities.contains("1-URGENT"),
-      "the SQL door must not serve the old file's cached rows")
+      "the SQL door must not serve the old file's rows")
     graft.clearCaches(spark)
   }
 
-  test("clearCaches frees the SQL door's in-memory relations") {
-    val q31 = SparkEntry.queries("q31_sql_agg")
-    q31(spark, sfDir).collect()
-    val views = Seq("orders", "lineitem", "customer", "nation", "documents")
-    assert(views.forall(spark.catalog.isCached), "the door holds small relations in memory")
+  test("clearCaches frees an Engine's in-memory relations") {
+    val eng = new graft.api.Engine(spark, tpchDd, sfDir)
+    eng.sql("SELECT count(*) FROM orders").collect()
+    val views = tpchDd.relations.keys.toSeq
+    assert(views.forall(spark.catalog.isCached), "sf0.001 relations are all small")
     graft.clearCaches(spark)
     assert(views.filter(spark.catalog.isCached).isEmpty,
       "clearCaches must leave no cached entry behind")
