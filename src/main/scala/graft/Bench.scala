@@ -1,54 +1,51 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 /** Driver-run benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
-  * Methodology (fixes from round-1 verdict):
+  * Methodology:
   *  - deterministic query order (SparkEntry.queries is a ListMap) plus a
-  *    separate warmup pass so no timed query absorbs JVM/codegen warmup;
-  *  - results are fully materialized through the `noop` sink — a bare
-  *    `.count()` lets Catalyst prune every column and turns scan-shaped
-  *    queries into parquet-footer metadata reads;
-  *  - failures are recorded per-query, excluded from the total, and flip the
-  *    exit code — a broken query must never make the bench look faster;
-  *  - each query is timed THREE times and the MEDIAN is reported (round-5
-  *    verdict: two consecutive judges re-ran the bench by hand to disprove
-  *    single-pass phantom regressions caused by machine noise — a median of
-  *    three collapses one slow outlier per query at 3× the runtime);
-  *  - per-query MIN and an aggregate `noise` field (Σ(max−min)/Σmedian)
-  *    are also emitted (round-6 verdict: a median cannot fix SUSTAINED
-  *    co-located load — BENCH_r06 reported 46.7 s where an idle rerun
-  *    measured 23.4 s. `min_total` is the best lower bound a loaded
-  *    machine can produce, and a large `noise` value marks the whole run
-  *    as polluted, so a judge can spot a bad run without re-running it);
-  *  - a polluted timed pass is RETRIED (round-9 verdict: the archive
-  *    protocol says clean-only, so the runner enforces it — up to
-  *    SPARK_GRAFT_BENCH_ATTEMPTS passes, lowest-noise attempt archived,
-  *    `polluted`+`attempts` flag the case where no clean pass happened);
-  *  - the JSON line is printed to stdout AND written to a file
-  *    (SPARK_GRAFT_BENCH_OUT, default ./bench_out.json) so the driver's
-  *    parser doesn't have to fish it out of sbt log noise;
-  *  - TWO fidelities (round-13 verdict #6): the FILE carries the full
-  *    record — full query names, both median and min maps, numeric `sf`
-  *    — while the stdout line is a COMPACT equivalent (qNN short keys,
-  *    median map only, error messages truncated) sized to fit the
-  *    driver's 2000-char stdout tail window, so BENCH_r{N}.json's
-  *    `parsed` field carries every per-query number standalone instead
-  *    of a truncated string (r10–r13 archived `parsed: null`);
-  *  - the file also says what ran the bench (`cpus` of the machine,
-  *    `default_parallelism` of the session, `codegen_cache_max_entries`)
-  *    and, per query, how many classes its timed samples compiled and
-  *    how long that took (`codegen_compiles`, `codegen_ms`: sums over the
-  *    archived attempt's samples; `warmup_codegen_*` for the warmup pass).
-  *    With generated code compiled once per JVM, the timed samples of a
-  *    query compile next to nothing; a large count means compile work is
-  *    back on the operation path.
+  *    separate untimed warmup pass over every query, so per-query codegen,
+  *    JIT and ICU-init costs (q19's string functions alone cost ~10 s on
+  *    first execution) land outside the timed region;
+  *  - results are fully materialized through [[Harness.materialize]];
+  *  - failures are recorded per query, excluded from the total, and flip
+  *    the exit code — a broken query must never make the bench look faster;
+  *  - each query is timed THREE times and the MEDIAN is reported: one slow
+  *    outlier per query collapses at 3× the runtime. The samples come from
+  *    INTERLEAVED passes over the suite (q1..qN, q1..qN, …), minutes apart,
+  *    so one transient stall costs one sample instead of inflating every
+  *    back-to-back rep (how r12 archived q72 at 1.95× its true time);
+  *  - per-query MIN and an aggregate `noise` (Σ(max−min)/Σmedian) are
+  *    emitted too: a median cannot fix SUSTAINED co-located load
+  *    (BENCH_r06 read 46.7 s where an idle rerun measured 23.4 s).
+  *    `min_total` is the best lower bound a loaded machine can produce;
+  *  - a timed pass with noise > 0.5 or errors is RETRIED, up to
+  *    SPARK_GRAFT_BENCH_ATTEMPTS passes, and the attempt with the fewest
+  *    errors, then the lowest noise, is archived (noise alone could prefer
+  *    a pass where a query crashed: its timings leave the denominator).
+  *    If no attempt is clean the line still ships with `polluted: true`
+  *    and `attempts`; a run with errors is also `failed` and `polluted`,
+  *    since its total excludes the failed queries;
+  *  - TWO fidelities: the FILE (SPARK_GRAFT_BENCH_OUT, default
+  *    ./bench_out.json) carries the full record — full query names, median
+  *    and min maps, numeric `sf` — while stdout gets a COMPACT equivalent
+  *    (qNN keys, medians only, errors clipped) sized for the driver's
+  *    2000-char stdout tail window;
+  *  - the file also says what ran the bench (`cpus`, the session's
+  *    `default_parallelism`, `codegen_cache_max_entries`) and, per query,
+  *    how many classes its timed samples compiled and how long that took
+  *    (`codegen_compiles`, `codegen_ms`; `warmup_codegen_*` for the
+  *    warmup). With generated code compiled once per JVM the timed samples
+  *    compile next to nothing; a large count means compile work is back
+  *    on the operation path;
+  *  - the dev-loop subset (SPARK_GRAFT_BENCH_ONLY="q72_hybrid_rrf,…", exact
+  *    names; the driver never sets it) ends with one untimed profiled run
+  *    per query ([[Harness.profile]]: the slowest stages and the executed
+  *    plan with its operator metrics) on stderr, after the timed samples.
   */
 object Bench {
-
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** JVM-wide totals: classes compiled (codegen-cache misses) and the
     * nanoseconds spent compiling them. */
@@ -56,30 +53,78 @@ object Bench {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
+  /** One query in an attempt: the median, min and max of its timed
+    * samples (0 when it failed), and the classes its samples compiled and
+    * the nanoseconds that took. */
+  private[graft] final case class Timing(name: String, median: Double,
+                                         min: Double, max: Double, ok: Boolean,
+                                         compiles: Long, compileNs: Long)
+
+  /** An attempt: its timings, errors and noise, the timed passes run so
+    * far, and the data it ran on. */
+  private[graft] final case class Record(timings: Seq[Timing],
+                                         errors: Seq[String], noise: Double,
+                                         attempts: Int, sfDir: String) {
+    def dirty: Boolean = noise > 0.5 || errors.nonEmpty
+  }
+
+  /** What ran the bench. */
+  private[graft] final case class Machine(cpus: Int, parallelism: Int,
+                                          codegenCacheMax: String,
+                                          warmupCompiles: Long, warmupNs: Long)
+
+  private def header(r: Record): String = {
+    val total = r.timings.filter(_.ok).map(_.median).sum
+    val minTotal = r.timings.filter(_.ok).map(_.min).sum
+    // `sf` as a NUMBER parsed from the dir name (…/sf0.1 -> 0.1); the
+    // raw dir rides in `sf_dir` so nothing is lost
+    val sfJson = "sf([0-9.]+)$".r.findFirstMatchIn(r.sfDir).map(_.group(1))
+      .getOrElse(Verify.jsonStr(r.sfDir))
+    f""""metric":"total","value":$total%.3f,"unit":"sec","min_total":$minTotal%.3f,"noise":${r.noise}%.2f,"polluted":${r.dirty},"failed":${r.errors.nonEmpty},"attempts":${r.attempts},"sf":$sfJson"""
+  }
+
+  private def perQuery(r: Record)(value: Timing => String): String =
+    r.timings.map(t => "\"" + t.name + "\":" + value(t)).mkString("{", ",", "}")
+
+  /** The file's full record. Error messages are escaped in full
+    * (Verify.jsonStr): a multi-line exception must not break the record
+    * on exactly the failed runs the `failed` flag exists for. */
+  private[graft] def fullLine(r: Record, m: Machine): String = {
+    val context =
+      s""""cpus":${m.cpus},"default_parallelism":${m.parallelism},""" +
+        s""""codegen_cache_max_entries":${m.codegenCacheMax},""" +
+        s""""warmup_codegen_compiles":${m.warmupCompiles},""" +
+        f""""warmup_codegen_ms":${m.warmupNs / 1e6}%.1f"""
+    s"""{${header(r)},$context,"sf_dir":${Verify.jsonStr(r.sfDir)},""" +
+      s""""queries":${perQuery(r)(t => if (t.ok) f"${t.median}%.3f" else "-1")},""" +
+      s""""queries_min":${perQuery(r)(t => if (t.ok) f"${t.min}%.3f" else "-1")},""" +
+      s""""codegen_compiles":${perQuery(r)(_.compiles.toString)},""" +
+      s""""codegen_ms":${perQuery(r)(t => f"${t.compileNs / 1e6}%.1f")},""" +
+      s""""errors":${r.errors.map(Verify.jsonStr).mkString("[", ",", "]")}}"""
+  }
+
+  /** The compact stdout twin: qNN keys (the unique name prefix), medians
+    * only, errors clipped. */
+  private[graft] def compactLine(r: Record): String = {
+    val qs = r.timings.map { t =>
+      "\"" + t.name.takeWhile(_ != '_') + "\":" +
+        (if (t.ok) f"${t.median}%.2f" else "-1")
+    }.mkString("{", ",", "}")
+    val errs = r.errors.map(e => Verify.jsonStr(e.take(80))).mkString("[", ",", "]")
+    s"""{${header(r)},"queries":$qs,"full":"bench_out.json","errors":$errs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(appName = "graft-bench")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(Harness.names(_).toSet)
+    val benchQueries = SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_(n)) }
 
-    // Dev-loop subset filter: SPARK_GRAFT_BENCH_ONLY="q72_hybrid_rrf,…"
-    // times just those queries (exact names). Unset = the full contract —
-    // the driver never sets it, so archived rounds are always complete.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benchQueries: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] =
-      SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_(n)) }
-
-    // Warmup: one untimed pass over EVERY query, so per-query codegen /
-    // Janino compile / JIT / ICU-init costs (q19's string functions alone
-    // cost ~10 s on first execution) land outside the timed region — the
-    // timed pass then measures steady-state plan execution.
     val warmup0 = codegen()
     benchQueries.foreach { case (name, fn) =>
-      // Failures don't abort the warmup (the timed pass re-raises and
-      // flags the query), but they shouldn't be SILENT either — a
-      // warmup-only OOM would otherwise surface one pass later than it
-      // could (round-6 verdict note).
-      try materialize(fn(spark, sfDir)) catch {
+      // a failure doesn't abort the warmup (the timed pass re-raises and
+      // flags the query), but it isn't silent either
+      try Harness.materialize(fn(spark, sfDir)) catch {
         case e: Throwable =>
           println(s"[bench] warmup failed for $name: " +
             s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
@@ -88,48 +133,19 @@ object Bench {
     val warmup1 = codegen()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // Polluted-run gate (round-9 verdict #2): BASELINE.md's protocol says
-    // archive only clean runs, yet BENCH_r09.json archived a noise-1.43
-    // line and every apparent regression in it was tenancy smear. The
-    // runner now ENFORCES the protocol: when a timed pass comes back with
-    // noise > 0.5 it is re-run (up to SPARK_GRAFT_BENCH_ATTEMPTS, default
-    // 3), and the LOWEST-noise attempt is the one archived — a transient
-    // co-tenant burst can no longer become the round's record just by
-    // landing first. If every attempt is polluted, the best line still
-    // ships (the driver needs a record) but carries `polluted: true` and
-    // `attempts` so no reader can mistake it for clean evidence.
-    case class Attempt(results: Seq[(String, Double, Double, Double, Boolean)],
-                       errors: Seq[String], noise: Double,
-                       codegen: collection.Map[String, (Long, Long)])
-    def timedPass(): Attempt = {
-      val errors = scala.collection.mutable.ListBuffer.empty[String]
-      // The `reps` samples of a query are taken on INTERLEAVED full
-      // passes over the suite (pass 1: q1..qN, pass 2: q1..qN, …), not
-      // back-to-back — r13, after r12 archived q72 at 1.95× its true
-      // time: back-to-back reps all sit inside the same few-second
-      // window, so one transient stall (GC pause cluster, co-tenant
-      // burst) longer than that window inflates EVERY rep and the
-      // per-query min — the statistic that exists to shed stalls —
-      // faithfully records the stall instead. Interleaving spreads a
-      // query's samples minutes apart; a localized stall now costs one
-      // sample, and min/median shed it. Same total work, same
-      // noise/pollution semantics.
-      val broken = scala.collection.mutable.Set.empty[String]
-      val times = scala.collection.mutable.LinkedHashMap.empty[
-        String, scala.collection.mutable.ArrayBuffer[Double]]
-      val compiled = scala.collection.mutable.Map.empty[String, (Long, Long)]
-        .withDefaultValue((0L, 0L))
+    def timedPass(attempt: Int): Record = {
+      val errors = mutable.ListBuffer.empty[String]
+      val broken = mutable.Set.empty[String]
+      val times = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
+      val compiled = mutable.Map.empty[String, (Long, Long)].withDefaultValue((0L, 0L))
       for (_ <- 0 until reps; (name, fn) <- benchQueries if !broken(name)) {
         val (c0, ns0) = codegen()
-        val t0 = System.nanoTime()
         try {
-          materialize(fn(spark, sfDir))
-          times.getOrElseUpdate(
-            name, scala.collection.mutable.ArrayBuffer.empty[Double]) +=
-            (System.nanoTime() - t0) / 1e9
+          val (_, secs) = Harness.timed(Harness.materialize(fn(spark, sfDir)))
+          times.getOrElseUpdate(name, mutable.ArrayBuffer.empty[Double]) += secs
         } catch {
-          // A failure on any pass marks the query broken (no partial
-          // medians over a flaky query).
+          // a failure on any pass marks the query broken (no partial
+          // medians over a flaky query)
           case e: Throwable =>
             errors += s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
             broken += name
@@ -139,115 +155,58 @@ object Bench {
           compiled(name) = (c + c1 - c0, ns + ns1 - ns0)
         }
       }
-      val results = benchQueries.map { case (name, _) =>
-        val ts = if (broken(name))
-          scala.collection.mutable.ArrayBuffer.empty[Double]
-        else times.getOrElse(
-          name, scala.collection.mutable.ArrayBuffer.empty[Double])
-        val median =
-          if (ts.isEmpty) 0.0
-          else ts.sorted.apply(ts.length / 2)
-        val min = if (ts.isEmpty) 0.0 else ts.min
-        val max = if (ts.isEmpty) 0.0 else ts.max
-        (name, median, min, max, !broken(name) && ts.nonEmpty)
+      val timings = benchQueries.map { case (name, _) =>
+        val ts = if (broken(name)) Seq.empty[Double]
+          else times.get(name).fold(Seq.empty[Double])(_.toSeq)
+        val (c, ns) = compiled(name)
+        if (ts.isEmpty) Timing(name, 0.0, 0.0, 0.0, ok = false, c, ns)
+        else Timing(name, ts.sorted.apply(ts.length / 2), ts.min, ts.max,
+          ok = true, c, ns)
       }
-      // Load-pollution indicator: Σ(max−min)/Σmedian over the successful
-      // queries. Idle machine ≈ 0.0–0.3; a sustained co-located load
-      // pushes it well past 1.
-      val total = results.collect { case (_, med, _, _, true) => med }.sum
-      val spread = results.collect { case (_, _, min, max, true) => max - min }.sum
-      Attempt(results, errors.toList, if (total > 0) spread / total else 0.0,
-        compiled)
+      // idle machine ≈ 0.0–0.3; a sustained co-located load pushes it
+      // well past 1
+      val total = timings.filter(_.ok).map(_.median).sum
+      val spread = timings.filter(_.ok).map(t => t.max - t.min).sum
+      Record(timings, errors.toList, if (total > 0) spread / total else 0.0,
+        attempt, sfDir)
     }
     val maxAttempts =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt.max(1)
-    var best = timedPass()
+    var best = timedPass(1)
     var attempt = 1
-    // Retry on errors as well as pollution, and prefer attempts by
-    // (fewer errors, then lower noise) — r10 advice: selection keyed on
-    // noise alone could archive an attempt where a query crashed (its
-    // timings vanish from the noise denominator, so a flaky-OOM pass can
-    // post LOWER noise than a fully successful one) over complete data.
-    while ((best.noise > 0.5 || best.errors.nonEmpty) && attempt < maxAttempts) {
+    while (best.dirty && attempt < maxAttempts) {
       System.err.println(
         f"bench attempt $attempt%d dirty (noise ${best.noise}%.2f, " +
           f"${best.errors.size}%d errors) — retrying")
-      val next = timedPass()
+      attempt += 1
+      val next = timedPass(attempt)
       if (next.errors.size < best.errors.size ||
           (next.errors.size == best.errors.size && next.noise < best.noise))
         best = next
-      attempt += 1
     }
-    val results = best.results
-    val errors = best.errors
+    val record = best.copy(attempts = attempt)
 
-    val qs = results.map { case (k, med, _, _, ok) =>
-      "\"" + k + "\":" + (if (ok) f"$med%.3f" else "-1")
-    }.mkString("{", ",", "}")
-    val qsMin = results.map { case (k, _, min, _, ok) =>
-      "\"" + k + "\":" + (if (ok) f"$min%.3f" else "-1")
-    }.mkString("{", ",", "}")
-    val qsCompiles = results.map { case (k, _, _, _, _) =>
-      "\"" + k + "\":" + best.codegen(k)._1
-    }.mkString("{", ",", "}")
-    val qsCompileMs = results.map { case (k, _, _, _, _) =>
-      "\"" + k + "\":" + f"${best.codegen(k)._2 / 1e6}%.1f"
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, med, _, _, true) => med }.sum
-    val minTotal = results.collect { case (_, _, min, _, true) => min }.sum
-    val noise = best.noise
-    // Full JSON string escape (Verify.jsonStr — ONE tested copy, pinned
-    // by VerifySpec): exception messages are routinely multi-line, and a
-    // raw newline inside the errors array would make the record
-    // unparseable on exactly the failed runs the `failed` flag exists to
-    // make machine-gateable.
-    val errJson = errors.map(Verify.jsonStr).mkString("[", ",", "]")
-    // Self-flag a load-polluted run (round-7 verdict #2): noise > 0.5 means
-    // the median column is inflated by co-located load and the line should
-    // be RE-RUN on an idle machine, not archived as the round's record —
-    // the r7 driver run had noise 0.81 with medians ~25% over their mins.
-    // `polluted` is machine-gateable; the stderr banner is for humans.
-    // Round-11 advice (high): a run with errors excludes the failed
-    // queries from `value`, so its total is NOT comparable to a clean
-    // round's — flag it `failed` AND `polluted` so neither a human nor a
-    // gate can mistake an incomparable total for clean evidence.
-    val failed = errors.nonEmpty
-    val polluted = noise > 0.5 || failed
-    if (polluted) System.err.println(
-      f"POLLUTED: bench noise $noise%.2f, ${errors.size}%d errors after " +
+    if (only.isDefined) benchQueries.foreach { case (name, fn) =>
+      try System.err.print(
+        Harness.profile(spark, name)(Harness.materialize(fn(spark, sfDir))))
+      catch {
+        case e: Throwable => System.err.println(
+          s"[bench] profile failed for $name: ${e.getClass.getSimpleName}")
+      }
+    }
+
+    if (record.dirty) System.err.println(
+      f"POLLUTED: bench noise ${record.noise}%.2f, ${record.errors.size}%d errors after " +
         f"$attempt attempts — the total is not comparable to a clean run " +
         "(min_total over the surviving queries only)")
-    // `sf` as a NUMBER parsed from the dir name (…/sf0.1 -> 0.1); the
-    // raw dir rides in `sf_dir` so nothing is lost
-    val sfNum = "sf([0-9.]+)$".r.findFirstMatchIn(sfDir).map(_.group(1))
-    val sfJson = sfNum.getOrElse(Verify.jsonStr(sfDir))
-    val header =
-      f""""metric":"total","value":$total%.3f,"unit":"sec","min_total":$minTotal%.3f,"noise":$noise%.2f,"polluted":$polluted,"failed":$failed,"attempts":$attempt,"sf":$sfJson"""
-    val context =
-      s""""cpus":${Runtime.getRuntime.availableProcessors},""" +
-        s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-        s""""codegen_cache_max_entries":""" +
-        spark.conf.get("spark.sql.codegen.cache.maxEntries") +
-        s""","warmup_codegen_compiles":${warmup1._1 - warmup0._1},""" +
-        f""""warmup_codegen_ms":${(warmup1._2 - warmup0._2) / 1e6}%.1f"""
-    val line =
-      s"""{$header,$context,"sf_dir":${Verify.jsonStr(sfDir)},"queries":$qs,"queries_min":$qsMin,""" +
-        s""""codegen_compiles":$qsCompiles,"codegen_ms":$qsCompileMs,"errors":$errJson}"""
-    // compact stdout twin: qNN keys (the unique name prefix), medians
-    // only, errors clipped — full fidelity lives in the file
-    val qsShort = results.map { case (k, med, _, _, ok) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + (if (ok) f"$med%.2f" else "-1")
-    }.mkString("{", ",", "}")
-    val errShort = errors.map(e => Verify.jsonStr(e.take(80)))
-      .mkString("[", ",", "]")
-    val shortLine =
-      s"""{$header,"queries":$qsShort,"full":"bench_out.json","errors":$errShort}"""
-
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    Files.writeString(Paths.get(outPath), line + "\n")
-    println(shortLine)
+    val machine = Machine(Runtime.getRuntime.availableProcessors,
+      spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.codegen.cache.maxEntries"),
+      warmup1._1 - warmup0._1, warmup1._2 - warmup0._2)
+    Harness.emit(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"),
+      fullLine(record, machine), compactLine(record))
     clearCaches(spark)
     spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    if (record.errors.nonEmpty) sys.exit(1)
   }
 }

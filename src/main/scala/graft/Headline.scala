@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -37,28 +37,6 @@ import graft.ops.TextOps
   */
 object Headline {
 
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    val plan = df.queryExecution.executedPlan.toString
-    def n(p: String) = p.r.findAllIn(plan).size
-    Map(
-      "exchange" -> (n("\\bExchange hashpartitioning") +
-        n("\\bExchange rangepartitioning") + n("\\bExchange SinglePartition")),
-      "smj" -> n("\\bSortMergeJoin"),
-      "bhj" -> n("\\bBroadcastHashJoin"),
-      "cartesian" -> (n("\\bCartesianProduct") + n("\\bBroadcastNestedLoopJoin")))
-  }
-
-  private def loadNow(): Double = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.getSystemLoadAverage
-
-  private def bandOf(preload: Double): String = {
-    val cpus = Runtime.getRuntime.availableProcessors
-    val cleanCut = math.min(2.0, cpus * 0.25)
-    if (preload <= cleanCut) "clean"
-    else if (preload <= math.max(cpus * 0.25, 2 * cleanCut)) "loaded"
-    else "polluted"
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("localdata/sf1")
     val exportDir = args.lift(1).getOrElse(
@@ -68,9 +46,8 @@ object Headline {
     val nShards = 32
     val ctxTokens = 1024
 
-    def runOnce(): (Double, Map[String, Int]) = {
+    def runOnce(): (Harness.Census, Double) = Harness.timed {
       val docs = table(spark, sfDir, "documents")
-      val t0 = System.nanoTime()
       // 1–4: gate → near-dup dedup → decontaminate (vs the src0 eval
       // set) → split, the q63 composition
       val cleaned = TextOps.cleanCorpus(
@@ -90,11 +67,11 @@ object Headline {
         TextOps.shuffleShard(mixed, "doc_id", "text", nShards),
         "text", "shard", "pos", ctxTokens)
       // 8: export — whole shards per task, byte-identical re-runs
-      val fp = fingerprint(packed)
+      val fp = Harness.census(packed)
       packed.repartition(nShards, col("shard"))
         .sortWithinPartitions(col("shard"), col("pos"))
         .write.partitionBy("shard").mode("overwrite").parquet(exportDir)
-      ((System.nanoTime() - t0) / 1e9, fp)
+      fp
     }
 
     // one warm-load pass (JVM/codegen warmup — the Bench discipline),
@@ -108,16 +85,15 @@ object Headline {
     val _ = runOnce()
     clearCaches(spark)
     val runs = (1 to attempts).map { i =>
-      val pl = loadNow()
-      val (w, f) = runOnce()
+      val load = Harness.sampleLoad()
+      val (f, w) = runOnce()
       clearCaches(spark)
       System.gc(); Thread.sleep(300)
       println(f"[headline] attempt $i/$attempts wall=$w%.2fs " +
-        f"preload=$pl%.1f (${bandOf(pl)})")
-      (w, f, pl)
+        f"preload=${load.preload}%.1f (${load.band})")
+      (w, f, load)
     }
-    val (wall, fp, preload) = runs.minBy(_._1)
-    val loadBand = bandOf(preload)
+    val (wall, fp, load) = runs.minBy(_._1)
 
     // row accounting AFTER the clock, from the committed files
     val exported = spark.read.parquet(exportDir)
@@ -127,16 +103,11 @@ object Headline {
       .agg(sum(col("m") + 1L)).head().getLong(0)
     val rowsIn = table(spark, sfDir, "documents").count()
 
-    val fpJson = s"""{"exchange":${fp("exchange")},"smj":${fp("smj")},""" +
-      s""""bhj":${fp("bhj")},"cartesian":${fp("cartesian")}}"""
     val wallsJson = runs.map(r => f"${r._1}%.2f").mkString("[", ",", "]")
-    val preloadsJson = runs.map(r => f"${r._3}%.1f").mkString("[", ",", "]")
+    val preloadsJson = runs.map(r => f"${r._3.preload}%.1f").mkString("[", ",", "]")
     val line =
-      f"""{"metric":"headline_pipeline","wall_sec":$wall%.2f,"attempts":$attempts,"walls":$wallsJson,"preloads":$preloadsJson,"sf_dir":${Verify.jsonStr(sfDir)},"rows_in":$rowsIn,"rows_exported":$rowsExported,"n_seqs":$nSeqs,"n_shards":$nShards,"ctx_tokens":$ctxTokens,"census":$fpJson,"load_band":"$loadBand","preload":$preload%.2f}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_OUT",
-      "headline_out.json")
-    Files.writeString(Paths.get(outPath), line + "\n")
-    println(line)
+      f"""{"metric":"headline_pipeline","wall_sec":$wall%.2f,"attempts":$attempts,"walls":$wallsJson,"preloads":$preloadsJson,"sf_dir":${Verify.jsonStr(sfDir)},"rows_in":$rowsIn,"rows_exported":$rowsExported,"n_seqs":$nSeqs,"n_shards":$nShards,"ctx_tokens":$ctxTokens,"census":${fp.json},"load_band":"${load.band}","preload":${load.preload}%.2f}"""
+    Harness.emit(sys.env.getOrElse("SPARK_GRAFT_HEADLINE_OUT", "headline_out.json"), line)
     clearCaches(spark)
     spark.stop()
   }

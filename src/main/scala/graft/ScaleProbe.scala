@@ -516,38 +516,18 @@ object ScaleProbe {
     "q298_registry_remove_reelect",
     "q299_registry_remove_phantom_audit")
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  /** Counts of the plan nodes that decide scale behavior, from the
-    * pre-execution physical plan (AQE's runtime re-plan can only improve
-    * on it — a static SMJ/Exchange regression at the bigger SF shows up
-    * here).
-    */
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    val plan = df.queryExecution.executedPlan.toString
-    def n(p: String) = p.r.findAllIn(plan).size
-    Map(
-      "exchange" -> (n("\\bExchange hashpartitioning") + n("\\bExchange rangepartitioning") + n("\\bExchange SinglePartition")),
-      "smj" -> n("\\bSortMergeJoin"),
-      "bhj" -> n("\\bBroadcastHashJoin"),
-      "cartesian" -> (n("\\bCartesianProduct") + n("\\bBroadcastNestedLoopJoin")))
-  }
-
   private case class Probe(name: String, coldS: Double, warmS: Double,
                            coldB: Double, warmB: Double,
-                           fpS: Map[String, Int], fpB: Map[String, Int],
+                           fpS: Harness.Census, fpB: Harness.Census,
                            gates: Seq[String]) {
     def ratio: Double = if (warmS > 0) warmB / warmS else 0.0
     def changed: Boolean = fpS != fpB
-    private def fpJson(fp: Map[String, Int]) =
-      s"""{"exchange":${fp("exchange")},"smj":${fp("smj")},"bhj":${fp("bhj")},"cartesian":${fp("cartesian")}}"""
     private def gatesJson: String =
       gates.map(g => s""""$g"""").mkString("[", ",", "]")
     private def noteJson: String =
       noteOf.get(name).map(n => s""","note":"$n"""").getOrElse("")
     def json: String =
-      f""""$name":{"gates":$gatesJson$noteJson,"small_cold":$coldS%.2f,"small_warm":$warmS%.2f,"big_cold":$coldB%.2f,"big_warm":$warmB%.2f,"warm_ratio":$ratio%.1f,"plan_small":${fpJson(fpS)},"plan_big":${fpJson(fpB)},"plan_changed":$changed}"""
+      f""""$name":{"gates":$gatesJson$noteJson,"small_cold":$coldS%.2f,"small_warm":$warmS%.2f,"big_cold":$coldB%.2f,"big_warm":$warmB%.2f,"warm_ratio":$ratio%.1f,"plan_small":${fpS.json},"plan_big":${fpB.json},"plan_changed":$changed}"""
   }
 
   /** Machine-checkable outlier documentation (r19 verdict #5): the
@@ -681,69 +661,59 @@ object ScaleProbe {
       case other => sys.error(s"gatesOf: unmapped probe '$other'")
     }
 
+  /** A filtered run's `queries` body: the rows of the `prior` result line
+    * that were not re-probed, re-emitted verbatim and in their order (so
+    * untouched rows stay bit-identical and provenance-auditable), then
+    * the `fresh` (name, row JSON) pairs. */
+  private[graft] def splice(prior: String, fresh: Seq[(String, String)]): String = {
+    val kept = if (prior.trim.isEmpty) Seq.empty[String] else {
+      val txt = prior.trim
+      val body = txt.substring(
+        txt.indexOf("\"queries\":{") + "\"queries\":{".length, txt.lastIndexOf("}}"))
+      // top-level probe entries: "name":{...{plan_small}...{plan_big}...}
+      """"([a-z0-9_]+)":\{[^{}]*\{[^{}]*\}[^{}]*\{[^{}]*\}[^{}]*\}"""
+        .r.findAllIn(body).toSeq
+    }
+    val reprobed = fresh.map(_._1).toSet
+    (kept.filterNot(e => reprobed.exists(n => e.startsWith("\"" + n + "\":"))) ++
+      fresh.map(_._2)).mkString(",")
+  }
+
   def main(args: Array[String]): Unit = {
     val small = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val big = args.lift(1).getOrElse("localdata/sf1")
     // optional 3rd arg: comma-separated substring filter (the Verify
     // dev-loop convention) — re-probe a touched operator without
     // re-running the whole 70+ probe sweep
-    val nameFilter: Seq[String] = args.lift(2)
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
-    // pre-run load flag (same rationale as StreamBench): a probe run on
-    // a busy machine inflates warm ratios and once misdiagnosed a
-    // rewrite as a non-improvement this round
-    val preload = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val cpus = Runtime.getRuntime.availableProcessors
-    // banded like StreamBench (r8 advice): "clean" means genuinely idle,
-    // not merely under a quarter of the cores — and capped BY the
-    // quarter-of-cores rule (r9 advice) so a small box can't loosen it.
-    // The loaded cutoff is max(quarter-of-cores, 2× the clean cutoff)
-    // (r10 advice): on ≤ 8 cpus the two cutoffs used to coincide and the
-    // middle band was unreachable — mid-load runs jumped straight from
-    // clean to polluted.
-    val cleanCut = math.min(2.0, cpus * 0.25)
-    val loadBand =
-      if (preload <= cleanCut) "clean"
-      else if (preload <= math.max(cpus * 0.25, 2 * cleanCut)) "loaded"
-      else "polluted"
-    val polluted = loadBand != "clean"
-    if (polluted) System.err.println(
-      f"$loadBand%s: pre-run load average $preload%.1f on $cpus cpus — " +
-        "ratios will be inflated; rerun idle")
+    val nameFilter: Seq[String] = args.lift(2).map(Harness.names).getOrElse(Nil)
+    // a probe run on a busy machine inflates warm ratios and once
+    // misdiagnosed a rewrite as a non-improvement
+    val load = Harness.preRun("ratios will be inflated")
     val spark = GraftSession.local(appName = "graft-scaleprobe")
 
-    def timeThunk(thunk: () => org.apache.spark.sql.DataFrame)
-        : (Double, Double) = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        materialize(thunk())
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = once(); val warm = once()
-      (cold, warm)
+    type Frame = () => org.apache.spark.sql.DataFrame
+    def once(frame: Frame): Double = Harness.timed(Harness.materialize(frame()))._2
+    /** Census and cold/warm times of one probe at both scales, with
+      * `reset` run after each step. */
+    def measure(name: String, mkS: Frame, mkB: Frame, reset: () => Unit): Probe = {
+      val fpS = Harness.census(mkS()); reset()
+      val coldS = once(mkS); val warmS = once(mkS); reset()
+      val fpB = Harness.census(mkB()); reset()
+      val coldB = once(mkB); val warmB = once(mkB); reset()
+      val p = Probe(name, coldS, warmS, coldB, warmB, fpS, fpB, gatesOf(name))
+      // progress is useful on a 10-minute run
+      println(f"[probe] $name small=${p.warmS}%.2fs big=${p.warmB}%.2fs " +
+        f"ratio=${p.ratio}%.1fx planChanged=${p.changed}")
+      p
     }
+    def selected(name: String) =
+      nameFilter.isEmpty || nameFilter.exists(name.contains)
 
-    def timeTwice(name: String, dir: String): (Double, Double) =
-      timeThunk(() => SparkEntry.queries(name)(spark, dir))
-
-    val selected =
-      if (nameFilter.isEmpty) probes
-      else probes.filter(n => nameFilter.exists(n.contains))
-    val results = selected.map { name =>
-      val fpS = fingerprint(SparkEntry.queries(name)(spark, small))
+    val results = probes.filter(selected).map { name =>
       // clearCaches between fingerprinting and timing: constructing
       // q46's frame eagerly derives and persists the shared near-dup
       // pair set, so without the reset the "cold" timing would silently
-      // exclude the dominant derivation cost
-      clearCaches(spark)
-      val (coldS, warmS) = timeTwice(name, small)
-      clearCaches(spark)
-      val fpB = fingerprint(SparkEntry.queries(name)(spark, big))
-      clearCaches(spark)
-      val (coldB, warmB) = timeTwice(name, big)
-      clearCaches(spark)
+      // exclude the dominant derivation cost.
       // localCheckpoint blocks (triangles' oriented edges, the
       // fingerprint relations, the Theil-Sen grid, …) linger in the
       // block manager until their RDD objects are GARBAGE-collected
@@ -751,12 +721,10 @@ object ScaleProbe {
       // accumulation inflated late probes ~1.5× (run-1 vs isolated
       // re-probe deltas, r17). Nudge the collector so each probe
       // starts against a drained store.
+      val p = measure(name, () => SparkEntry.queries(name)(spark, small),
+        () => SparkEntry.queries(name)(spark, big), () => clearCaches(spark))
       System.gc()
       Thread.sleep(300)
-      val p = Probe(name, coldS, warmS, coldB, warmB, fpS, fpB, gatesOf(name))
-      // progress is useful on a 10-minute run
-      println(f"[probe] $name small=${p.warmS}%.2fs big=${p.warmB}%.2fs " +
-        f"ratio=${p.ratio}%.1fx planChanged=${p.changed}")
       p
     }
 
@@ -771,136 +739,89 @@ object ScaleProbe {
     // base-sensitivity — ≈1× is the batch-proportional signature,
     // ≈10× is base-proportional. The rebuild row is the deliberate
     // base-proportional contrast extendIndex must beat.
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     import graft.ops.{Dedup, Similarity}
-    def maintSetup(dir: String) = {
+    final class Maint(val dir: String) {
       val docs = table(spark, dir, "documents")
       val batchD = docs.orderBy(col("doc_id")).limit(500).localCheckpoint()
-      val baseD = docs.join(batchD.select("doc_id"), Seq("doc_id"), "left_anti")
-      val emb = table(spark, dir, "embeddings")
+      private val baseD =
+        docs.join(batchD.select("doc_id"), Seq("doc_id"), "left_anti")
+      private val emb = table(spark, dir, "embeddings")
       val batchE = emb.orderBy(col("vec_id")).limit(200).localCheckpoint()
-      val baseE = emb.join(batchE.select("vec_id"), Seq("vec_id"), "left_anti")
+      private val baseE =
+        emb.join(batchE.select("vec_id"), Seq("vec_id"), "left_anti")
       // untimed: build + SAVE + LOAD both indexes — maintenance acts on
       // the stored artifact, exactly like a restarted ingest process
-      val dDir = Files.createTempDirectory("probe-dedup-idx").toString
+      private val dDir = Files.createTempDirectory("probe-dedup-idx").toString
       Dedup.buildIndex(baseD, "doc_id", "text").save(dDir)
-      val vDir = Files.createTempDirectory("probe-ivf-idx").toString
+      private val vDir = Files.createTempDirectory("probe-ivf-idx").toString
       Similarity.fitIvf(baseE).save(vDir)
-      val pDir = Files.createTempDirectory("probe-pq-idx").toString
+      private val pDir = Files.createTempDirectory("probe-pq-idx").toString
       Similarity.fitPq(baseE).save(pDir)
-      (Dedup.loadIndex(spark, dDir), batchD, docs,
-        Similarity.loadIvf(spark, vDir), batchE,
-        Similarity.loadPq(spark, pDir))
+      val idx = Dedup.loadIndex(spark, dDir)
+      val ivf = Similarity.loadIvf(spark, vDir)
+      val pq = Similarity.loadPq(spark, pDir)
     }
-    // a filtered run skips the maintenance family unless a filter
-    // substring matches one of the probe NAMES — the same
-    // `name.contains(filter)` contract as the query probes (names
-    // declared here because setup must run before the probe table is
-    // built; kept in sync by the require against maintProbes below)
-    val maintNames = Seq("maint_extend_dedup_index",
-      "maint_rebuild_dedup_index", "maint_extend_ivf",
-      "maint_encode_pq", "maint_refine_ivf", "prod_semantic_pairs")
-    val runMaint = nameFilter.isEmpty ||
-      maintNames.exists(n => nameFilter.exists(n.contains))
-    val (idxS, batchDS, docsS, ivfS, batchES, pqS) =
-      if (runMaint) maintSetup(small) else (null, null, null, null, null, null)
-    val (idxB, batchDB, docsB, ivfB, batchEB, pqB) =
-      if (runMaint) maintSetup(big) else (null, null, null, null, null, null)
-    val maintProbes: Seq[(String, () => org.apache.spark.sql.DataFrame,
-        () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("maint_extend_dedup_index",
-        () => Dedup.extendIndex(idxS, batchDS, "doc_id", "text").bands,
-        () => Dedup.extendIndex(idxB, batchDB, "doc_id", "text").bands),
-      ("maint_rebuild_dedup_index",
-        () => Dedup.buildIndex(docsS, "doc_id", "text").bands,
-        () => Dedup.buildIndex(docsB, "doc_id", "text").bands),
-      ("maint_extend_ivf",
-        // the extendIvf CALL runs the eager guards (id semi-join +
-        // overgrowth count); the materialized frame is the assignment
-        // delta — together the full per-batch ingest cost. The
-        // fingerprint sees the delta plan only (the guards are driver
-        // actions, not part of the returned frame).
-        () => { Similarity.extendIvf(ivfS, batchES)
-                Similarity.assignBatch(ivfS, batchES) },
-        () => { Similarity.extendIvf(ivfB, batchEB)
-                Similarity.assignBatch(ivfB, batchEB) }),
-      ("maint_encode_pq",
-        // PQ ingest maintenance: encode the batch against the STORED
-        // codebooks — by construction it never reads the base (the
-        // append is the artifact), so the ratio column should read ≈1×;
-        // the row documents the per-batch cost and would CATCH any
-        // future base-coupling regression
-        () => Similarity.encodePqBatch(pqS, batchES),
-        () => Similarity.encodePqBatch(pqB, batchEB)),
-      ("maint_refine_ivf",
-        // the compaction-cadence contrast to extend: ONE distributed
-        // Lloyd round over the FULL corpus (refineIvf — the cell-balance
-        // repair / post-drift refit). Deliberately corpus-proportional:
-        // the ratio should read ≈ the corpus scan ratio (~10× at 10×
-        // rows), pricing what a scheduled refit costs vs the per-batch
-        // extend rows above; the materialized frame is the re-assigned
-        // inverted file (the mean aggregates are driver actions inside
-        // the call, included in the timing)
-        () => Similarity.refineIvf(ivfS,
-          table(spark, small, "embeddings"), iters = 1).assigned,
-        () => Similarity.refineIvf(ivfB,
-          table(spark, big, "embeddings"), iters = 1).assigned),
-      ("prod_semantic_pairs",
-        // the PRODUCTION path of the q87 recall gate: semanticPairs
-        // alone — auto-sized cells, two-probe assignment, capped cell
-        // pair join, NO exact comparator (q87's quadratic half is the
-        // gate's evidence, not the user's cost). Ratio should read
-        // ≈ n^1.5 / amortized fit, far under the gate row's
-        () => Similarity.semanticPairs(
-          table(spark, small, "embeddings"), threshold = 0.4),
-        () => Similarity.semanticPairs(
-          table(spark, big, "embeddings"), threshold = 0.4)))
-    require(maintProbes.map(_._1) == maintNames,
-      s"maintNames out of sync with maintProbes: " +
-        s"$maintNames vs ${maintProbes.map(_._1)}")
-    val maintResults = (if (runMaint) maintProbes
-      else Seq.empty[(String, () => org.apache.spark.sql.DataFrame,
-        () => org.apache.spark.sql.DataFrame)]).map {
-      case (name, mkS, mkB) =>
-      val fpS = fingerprint(mkS())
-      val (coldS, warmS) = timeThunk(mkS)
-      val fpB = fingerprint(mkB())
-      val (coldB, warmB) = timeThunk(mkB)
-      val p = Probe(name, coldS, warmS, coldB, warmB, fpS, fpB, gatesOf(name))
-      println(f"[probe] $name small=${p.warmS}%.2fs big=${p.warmB}%.2fs " +
-        f"ratio=${p.ratio}%.1fx planChanged=${p.changed}")
-      p
+    // set up (untimed) only when a selected maintenance probe first
+    // builds its frame
+    lazy val maintS = new Maint(small)
+    lazy val maintB = new Maint(big)
+    val maintProbes: Seq[(String, Maint => DataFrame)] = Seq(
+      "maint_extend_dedup_index" ->
+        (m => Dedup.extendIndex(m.idx, m.batchD, "doc_id", "text").bands),
+      "maint_rebuild_dedup_index" ->
+        (m => Dedup.buildIndex(m.docs, "doc_id", "text").bands),
+      // the extendIvf CALL runs the eager guards (id semi-join +
+      // overgrowth count); the materialized frame is the assignment
+      // delta — together the full per-batch ingest cost. The
+      // fingerprint sees the delta plan only (the guards are driver
+      // actions, not part of the returned frame).
+      "maint_extend_ivf" -> { m =>
+        Similarity.extendIvf(m.ivf, m.batchE)
+        Similarity.assignBatch(m.ivf, m.batchE)
+      },
+      // PQ ingest maintenance: encode the batch against the STORED
+      // codebooks — by construction it never reads the base (the
+      // append is the artifact), so the ratio column should read ≈1×;
+      // the row documents the per-batch cost and would CATCH any
+      // future base-coupling regression
+      "maint_encode_pq" -> (m => Similarity.encodePqBatch(m.pq, m.batchE)),
+      // the compaction-cadence contrast to extend: ONE distributed
+      // Lloyd round over the FULL corpus (refineIvf — the cell-balance
+      // repair / post-drift refit). Deliberately corpus-proportional:
+      // the ratio should read ≈ the corpus scan ratio (~10× at 10×
+      // rows), pricing what a scheduled refit costs vs the per-batch
+      // extend rows above; the materialized frame is the re-assigned
+      // inverted file (the mean aggregates are driver actions inside
+      // the call, included in the timing)
+      "maint_refine_ivf" -> (m => Similarity.refineIvf(m.ivf,
+        table(spark, m.dir, "embeddings"), iters = 1).assigned),
+      // the PRODUCTION path of the q87 recall gate: semanticPairs
+      // alone — auto-sized cells, two-probe assignment, capped cell
+      // pair join, NO exact comparator (q87's quadratic half is the
+      // gate's evidence, not the user's cost). Ratio should read
+      // ≈ n^1.5 / amortized fit, far under the gate row's
+      "prod_semantic_pairs" -> (m => Similarity.semanticPairs(
+        table(spark, m.dir, "embeddings"), threshold = 0.4)))
+    // a filtered run keeps a maintenance probe when a filter substring
+    // matches its name — the same contract as the query probes
+    val maintResults = maintProbes.filter(p => selected(p._1)).map {
+      case (name, frame) =>
+        measure(name, () => frame(maintS), () => frame(maintB), () => ())
     }
     val all = results ++ maintResults
 
     val anyChanged = all.exists(_.changed)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "scale_probe.json")
-    // A FILTERED run merges into the existing file instead of
-    // truncating the sweep to the filtered rows: keep every stored
-    // probe body whose key was not re-probed (string-level splice —
-    // the stored bodies are re-emitted verbatim, so untouched rows
-    // stay bit-identical and provenance-auditable).
-    val merged: String =
-      if (nameFilter.isEmpty) all.map(_.json).mkString(",")
-      else {
-        val prior = if (Files.exists(Paths.get(outPath))) {
-          val txt = Files.readString(Paths.get(outPath)).trim
-          val qStart = txt.indexOf("\"queries\":{")
-          val body = txt.substring(qStart + "\"queries\":{".length,
-            txt.lastIndexOf("}}"))
-          // split top-level probe entries: "name":{...}
-          """"([a-z0-9_]+)":\{[^{}]*\{[^{}]*\}[^{}]*\{[^{}]*\}[^{}]*\}"""
-            .r.findAllIn(body).toSeq
-        } else Seq.empty
-        val reprobed = all.map(_.name).toSet
-        val kept = prior.filterNot(e =>
-          reprobed.exists(n => e.startsWith("\"" + n + "\":")))
-        (kept ++ all.map(_.json)).mkString(",")
-      }
-    val line =
-      f"""{"metric":"scale_probe","small":"$small","big":"$big","plan_changes":$anyChanged,"preload":$preload%.1f,"load_band":"$loadBand","polluted":$polluted,"queries":{$merged}}"""
-    Files.writeString(Paths.get(outPath), line + "\n")
-    println(line)
+    val rows = all.map(p => p.name -> p.json)
+    val merged =
+      if (nameFilter.isEmpty) rows.map(_._2).mkString(",")
+      else splice(
+        if (Files.exists(Paths.get(outPath))) Files.readString(Paths.get(outPath)) else "",
+        rows)
+    Harness.emit(outPath,
+      s"""{"metric":"scale_probe","small":"$small","big":"$big","plan_changes":$anyChanged,${load.json},"queries":{$merged}}""")
     spark.stop()
   }
 }

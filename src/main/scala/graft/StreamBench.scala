@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
@@ -31,33 +31,9 @@ object StreamBench {
     // early-r8 508k/359k state-store rows were exactly this — archived
     // from a driver-loaded machine and only caught by idle reruns). The
     // batch Bench self-flags with intra-run `noise`; a 20 s streaming
-    // run has no second sample to compare, so the pre-run load average
-    // is the honest proxy.
-    val preload = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    val cpus = Runtime.getRuntime.availableProcessors
-    // Banded, not binary (r8 advice): the old single threshold
-    // (preload > 0.25*cpus = 8.0 on this box) let a load-7 run archive
-    // as clean. For a throughput bench ANY competing work understates
-    // the pipeline, so "clean" demands a genuinely idle box (≤ 2
-    // absolute), mid-load runs are "loaded" (usable for plumbing, not
-    // for archived throughput claims), and the old threshold now marks
-    // "polluted". The archive rule keys on load_band == "clean".
-    // min(2.0, cpus*0.25), not 2.0 flat (r9 advice): on a small box
-    // (< 8 cpus) a flat 2.0 would LOOSEN the old quarter-of-cores rule
-    // — load 1.9 on 2 cpus is a saturated machine, not a clean one.
-    // Loaded cutoff = max(quarter-of-cores, 2× clean) (r10 advice): on
-    // ≤ 8 cpus the two cutoffs used to coincide, making the middle band
-    // unreachable — mid-load runs jumped straight to polluted.
-    val cleanCut = math.min(2.0, cpus * 0.25)
-    val loadBand =
-      if (preload <= cleanCut) "clean"
-      else if (preload <= math.max(cpus * 0.25, 2 * cleanCut)) "loaded"
-      else "polluted"
-    val polluted = loadBand != "clean"
-    if (polluted) System.err.println(
-      f"$loadBand%s: pre-run load average $preload%.1f on $cpus cpus — " +
-        "throughput will understate the pipeline; rerun idle")
+    // run has no second sample to compare, so the pre-run load is the
+    // honest proxy.
+    val load = Harness.preRun("throughput will understate the pipeline")
 
     val spark = GraftSession.local(appName = "graft-streambench")
     val rps = sys.env.getOrElse("SPARK_GRAFT_STREAM_RPS", "200000").toInt
@@ -94,15 +70,15 @@ object StreamBench {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
 
+    // The rate source every mode reads: `value` counts rows from 0.
+    def rate() = spark.readStream.format("rate")
+      .option("rowsPerSecond", rps).option("numPartitions", 8).load()
+
     // rate → the events shape the sessionizer consumes. user_id cycles
     // over `users`, so consecutive events of one user sit `users`
     // synthetic seconds apart — far past the 1-minute gap, so every event
     // closes its user's previous session once the watermark passes it.
-    val events = spark.readStream.format("rate")
-      .option("rowsPerSecond", rps)
-      .option("numPartitions", 8)
-      .load()
-      .select(
+    val events = rate().select(
         timestamp_micros(col("value") * 1000000L).as("ts"),
         (col("value") % users).as("user_id"))
 
@@ -132,6 +108,29 @@ object StreamBench {
     require(!(flagBcast && flagStored == "bucketed"),
       "FLAG_BCAST and FLAG_STORED=bucketed are mutually exclusive paths")
 
+    // flag and spanflag: a flagBase-doc base where doc k's text is 45
+    // words in a key-disjoint range, and a stream whose keys walk the
+    // 2×flagBase residues, so half the arriving docs match a base doc
+    def keyText(key: org.apache.spark.sql.Column) =
+      concat_ws(" ", transform(sequence(lit(0), lit(44)),
+        j => concat(lit("w"), (key * 50 + j).cast("string"))))
+    def keyedBase() = spark.range(flagBase.toLong)
+      .select(col("id").as("doc_id"), keyText(col("id")).as("text"))
+    def keyedDocs() = rate().select(col("timestamp").as("ts"),
+      col("value").as("doc_id"),
+      keyText(pmod(col("value") * lit(1000003L), lit(2L * flagBase))).as("text"))
+
+    // score and nbscore: a 50k-term vocabulary `<p>0`..`<p>49999`, 10
+    // terms per vocabulary doc; an arriving doc is one novel token and 49
+    // vocabulary terms
+    def terms(p: String, id: org.apache.spark.sql.Column, n: Int) =
+      transform(sequence(lit(0), lit(n - 1)),
+        j => concat(lit(p), pmod(id * n + j, lit(50000L)).cast("string")))
+    def termDocs(p: String) = rate().select(col("timestamp").as("ts"),
+      col("value").as("doc_id"), concat_ws(" ",
+        concat(lit("novel"), col("value").cast("string")),
+        terms(p, col("value"), 49)).as("text"))
+
     val sink =
       if (mode == "flag") {
         // Streaming incremental dedup: arriving docs flagged against a
@@ -140,27 +139,21 @@ object StreamBench {
         // so the index MUST be materialized once, before the clock).
         // text(key) = 45 words in a key-disjoint range (stride 50 > 45 +
         // shingle margin), so key k matches base doc k exactly and
-        // nothing else: stream keys range over 2×nBase, making HALF the
+        // nothing else: stream keys range over 2×flagBase, making HALF the
         // input near-dups — every flag at the egress is one matched doc.
-        // Keys walk the 2×nBase residues via an odd-prime multiplier
-        // (bijective: gcd(p, 2·nBase)=1), NOT `value mod 2·nBase`: a
+        // Keys walk the 2×flagBase residues via an odd-prime multiplier
+        // (bijective: gcd(p, 2·flagBase)=1), NOT `value mod 2·flagBase`: a
         // 60 s run consumes only a prefix of the value space, and with
         // the plain mod a base bigger than the consumed prefix made
         // that prefix 100% matches (an r9 500k-base row measured
         // pairs == input docs) — the match mix must be ~50% for EVERY
         // consumed prefix or rows at different base sizes don't compare.
-        val nBase = flagBase
-        def textOf(key: org.apache.spark.sql.Column) =
-          concat_ws(" ", transform(sequence(lit(0), lit(44)),
-            j => concat(lit("w"), (key * 50 + j).cast("string"))))
-        val base = spark.range(nBase.toLong)
-          .select(col("id").as("doc_id"), textOf(col("id")).as("text"))
         // The production round trip, not an in-session shortcut: build →
         // save (two relations + manifest) → loadIndex (re-checks the
         // hash scheme) → persist. The stream below probes the STORED
         // index — exactly what a cluster restarting between compaction
         // and ingest would do.
-        val built = ops.Dedup.buildIndex(base, "doc_id", "text")
+        val built = ops.Dedup.buildIndex(keyedBase(), "doc_id", "text")
         val index =
           if (flagStored == "bucketed") {
             // partitioned stored form: bucketed tables, persisted like
@@ -182,14 +175,7 @@ object StreamBench {
             idx.bands.count(); idx.shingles.count() // build before the clock
             idx
           }
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
-            textOf(pmod(col("value") * lit(1000003L), lit(2L * nBase)))
-              .as("text"))
-        streaming.DocumentStreams.flagAgainstBaseIndexed(docs, index,
+        streaming.DocumentStreams.flagAgainstBaseIndexed(keyedDocs(), index,
           broadcastIndex = flagBcast)
       }
       else if (mode == "spanflag") {
@@ -201,27 +187,14 @@ object StreamBench {
         // HALF the arriving docs embed a base doc's text verbatim —
         // each match emits its 31 window flags (W=15 over 45 tokens),
         // every non-match still pays the full rolling scan + probe.
-        val nBase = flagBase
-        def textOf(key: org.apache.spark.sql.Column) =
-          concat_ws(" ", transform(sequence(lit(0), lit(44)),
-            j => concat(lit("w"), (key * 50 + j).cast("string"))))
-        val base = spark.range(nBase.toLong)
-          .select(col("id").as("doc_id"), textOf(col("id")).as("text"))
         val idxDir = java.nio.file.Files
           .createTempDirectory("graft-spanflag-index").toString
-        ops.Dedup.fitSpanIndex(base, "doc_id", "text", window = 15)
+        ops.Dedup.fitSpanIndex(keyedBase(), "doc_id", "text", window = 15)
           .save(idxDir)
         val loaded = ops.Dedup.loadSpanIndex(spark, idxDir)
         val idx = loaded.copy(fps = loaded.fps.persist())
         idx.fps.count() // build before the clock
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
-            textOf(pmod(col("value") * lit(1000003L), lit(2L * nBase)))
-              .as("text"))
-        streaming.DocumentStreams.spanFlagStream(docs, idx,
+        streaming.DocumentStreams.spanFlagStream(keyedDocs(), idx,
           broadcastIndex = flagBcast)
       }
       else if (mode == "score") {
@@ -231,25 +204,13 @@ object StreamBench {
         // tokens drawn from that vocabulary plus one novel token so both
         // the map hit and the singleton-floor paths run per row.
         val vocabDocs = spark.range(50000L)
-          .select(concat_ws(" ", transform(sequence(lit(0), lit(9)),
-            j => concat(lit("v"), pmod(col("id") * 10 + j, lit(50000L))
-              .cast("string")))).as("text"))
+          .select(concat_ws(" ", terms("v", col("id"), 10)).as("text"))
         val freqDir = java.nio.file.Files
           .createTempDirectory("graft-score-freqs").toString
         ops.TextOps.saveTermFreqs(
           ops.TextOps.termFreqs(vocabDocs, "text"), freqDir)
         val freqs = ops.TextOps.loadTermFreqs(spark, freqDir)
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
-            concat_ws(" ",
-              concat(lit("novel"), col("value").cast("string")),
-              transform(sequence(lit(0), lit(48)),
-                j => concat(lit("v"), pmod(col("value") * 49 + j,
-                  lit(50000L)).cast("string")))).as("text"))
-        streaming.DocumentStreams.surprisalStream(docs, freqs)
+        streaming.DocumentStreams.surprisalStream(termDocs("v"), freqs)
           .select(col("doc_id"), col("n_tokens"), col("surprisal"))
       }
       else if (mode == "nbscore") {
@@ -261,28 +222,15 @@ object StreamBench {
         // so the weight-map hit AND the default-weight path run per row
         // — the score mode's shape with a per-term map lookup instead
         // of a frequency join.
-        val vocabDocs = spark.range(50000L)
-          .select((col("id") % 2 === 0).as("is_t"),
-            concat_ws(" ", transform(sequence(lit(0), lit(9)),
-              j => concat(lit("w"), pmod(col("id") * 10 + j, lit(50000L))
-                .cast("string")))).as("text"))
+        val vocabDocs = spark.range(50000L).select((col("id") % 2 === 0).as("is_t"),
+          concat_ws(" ", terms("w", col("id"), 10)).as("text"))
         val nbDir = java.nio.file.Files
           .createTempDirectory("graft-nb-model").toString
         ops.Classify.saveNbModel(
           ops.Classify.fitNbClassifier(vocabDocs, "text", col("is_t")),
           nbDir)
         val model = ops.Classify.loadNbModel(spark, nbDir)
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
-            concat_ws(" ",
-              concat(lit("novel"), col("value").cast("string")),
-              transform(sequence(lit(0), lit(48)),
-                j => concat(lit("w"), pmod(col("value") * 49 + j,
-                  lit(50000L)).cast("string")))).as("text"))
-        streaming.DocumentStreams.nbStream(docs, model)
+        streaming.DocumentStreams.nbStream(termDocs("w"), model)
           .select(col("doc_id"), col("nb_logodds"), col("keep"))
       }
       else if (mode == "scrub") {
@@ -291,11 +239,7 @@ object StreamBench {
         // the rate counter, so EVERY row runs all five audit regexes
         // plus three live rewrites — the regex-bound end of the
         // streaming surface (score mode is the hash-join-bound end).
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
+        val docs = rate().select(col("timestamp").as("ts"), col("value").as("doc_id"),
             concat_ws(" ",
               lit((1 to 45).map(i => s"t$i").mkString(" ")),
               concat(lit("u"), col("value").cast("string"), lit("@ex.org")),
@@ -324,11 +268,7 @@ object StreamBench {
           .withColumn("uh", xxhash64(col("unit")))
           .withColumn("line_df", lit(10L))
         val idx = ops.Dedup.BoilerplateIndex(lineDf, "\n")
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
+        val docs = rate().select(col("timestamp").as("ts"), col("value").as("doc_id"),
             concat(lit("g"), pmod(col("value"), lit(64L)).cast("string"))
               .as("grp"),
             concat_ws("\n",
@@ -351,11 +291,7 @@ object StreamBench {
         // rate → document shape: ~50-word gate-passing texts; integer-
         // halved ids make every consecutive value pair share content, so
         // HALF the stream is exact re-crawl the dedup must absorb
-        val docs = spark.readStream.format("rate")
-          .option("rowsPerSecond", rps)
-          .option("numPartitions", 8)
-          .load()
-          .select(col("timestamp").as("ts"), col("value").as("doc_id"),
+        val docs = rate().select(col("timestamp").as("ts"), col("value").as("doc_id"),
             lit("en").as("lang"),
             concat_ws(" ",
               lit("the a an of and is to the of and is"),
@@ -387,11 +323,11 @@ object StreamBench {
       .outputMode(OutputMode.Append())
       .start()
 
-    val t0 = System.nanoTime()
-    Thread.sleep(secs * 1000L)
-    q.stop()
-    q.awaitTermination()
-    val elapsed = (System.nanoTime() - t0) / 1e9
+    val (_, elapsed) = Harness.timed {
+      Thread.sleep(secs * 1000L)
+      q.stop()
+      q.awaitTermination()
+    }
 
     // Throughput is measured at the EGRESS: sum(n_events) over the
     // sessions that landed in parquet counts only rows that fully
@@ -429,10 +365,8 @@ object StreamBench {
       s""","flag_base":$flagBase,"broadcast":$flagBcast,"stored":"$flagStored","trigger_secs":$triggerSecs"""
     else ""
     val line =
-      f"""{"metric":"$metric","value":$rowsPerSec%.0f,"unit":"rows/sec","egress_events":$egressEvents,"egress_sessions":$egressSessions,"listener_input_rows":${inputRows.get()},"elapsed_sec":$elapsed%.1f,"configured_rps":$rps,"state_store":"$stateStore","mode":"$mode"$flagCfg,"preload":$preload%.1f,"load_band":"$loadBand","polluted":$polluted}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", "stream_bench.json")
-    Files.writeString(Paths.get(outPath), line + "\n")
-    println(line)
+      f"""{"metric":"$metric","value":$rowsPerSec%.0f,"unit":"rows/sec","egress_events":$egressEvents,"egress_sessions":$egressSessions,"listener_input_rows":${inputRows.get()},"elapsed_sec":$elapsed%.1f,"configured_rps":$rps,"state_store":"$stateStore","mode":"$mode"$flagCfg,${load.json}}"""
+    Harness.emit(sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", "stream_bench.json"), line)
 
     spark.stop()
     // best-effort temp cleanup

@@ -31,38 +31,66 @@ import graft.catalog.DataDictionary
   * entry for its views' plans before caching them. The session keeps
   * one in-memory copy per view name: a later Engine registering the
   * name, or [[graft.clearCaches]], frees it.
+  *
+  * Each door answers over this Engine's own relations: `scan` and `ra`
+  * read its frames, and `sql`/`sqlDistinct` first take back any view
+  * name another Engine or the contract's SQL door has since replaced.
+  * While the views are its own, a call writes nothing to the catalog.
   */
 final class Engine(val spark: SparkSession, dd: DataDictionary,
                    dataDir: String, format: String = "parquet") {
 
-  dd.relations.keys.foreach { rel =>
-    val df = dd.load(spark, dataDir, rel, format)
-    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.autoBroadcastJoinThreshold
+  /** Each relation's view frame, and whether it is held in memory. */
+  private val layout: Map[String, (DataFrame, Boolean)] =
+    dd.relations.keys.map { rel =>
+      val df = dd.load(spark, dataDir, rel, format)
+      val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold
+      rel -> (if (small) (df.coalesce(1), true) else (df, false))
+    }.toMap
+
+  /** The session's view entry for each name, as this Engine last bound
+    * it: a replaced view is a different entry. */
+  private val bound = scala.collection.mutable.Map.empty[String, AnyRef]
+
+  private def viewOf(rel: String): AnyRef =
+    spark.sessionState.catalog.getRawTempView(rel).orNull
+
+  /** Bind `rel`'s name to this Engine's frame; the first Engine to take
+    * the name after another one caches its frame anew. */
+  private def bind(rel: String): Unit = {
+    val (frame, inMemory) = layout(rel)
+    frame.createOrReplaceTempView(rel)
     graft.SessionMemo(spark, s"engine:$rel", this,
         (held: Option[DataFrame]) => held.foreach(_.unpersist())) {
-      if (!small) { df.createOrReplaceTempView(rel); None }
+      if (!inMemory) None
       else {
-        val one = df.coalesce(1)
-        one.createOrReplaceTempView(rel)
         spark.catalog.uncacheTable(rel)
         spark.catalog.cacheTable(rel)
-        Some(one)
+        Some(frame)
       }
     }
+    bound(rel) = viewOf(rel)
+  }
+
+  layout.keys.foreach(bind)
+
+  /** Take back every name whose session view is no longer this Engine's. */
+  private def ownViews(): Unit = synchronized {
+    layout.keys.foreach(rel => if (viewOf(rel) ne bound(rel)) bind(rel))
   }
 
   /** Full Spark SQL over the registered dd views. */
-  def sql(query: String): DataFrame = spark.sql(query)
+  def sql(query: String): DataFrame = { ownViews(); spark.sql(query) }
 
   /** Reference-parity door: results are SETS regardless of whether the
     * query says DISTINCT (the reference frontend only emits π-with-dedup).
     */
-  def sqlDistinct(query: String): DataFrame = spark.sql(query).distinct()
+  def sqlDistinct(query: String): DataFrame = sql(query).distinct()
 
-  /** RA-combinator door. */
+  /** RA-combinator door. A name outside the dd reads the session's table. */
   def scan(rel: String): Relation =
-    Relation(spark.table(rel).alias(rel))
+    Relation(layout.get(rel).fold(spark.table(rel))(_._1).alias(rel))
 
   /** RA-STRING door: the reference's radb text syntax
     * (`run_radb_query_in_spark` on a string,

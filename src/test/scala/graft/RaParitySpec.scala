@@ -179,11 +179,34 @@ class RaParitySpec extends SparkSpec {
         assert(df.collect().map(_.getString(0)).toSet ===
           Set("Amy", "Fay", "Hil"), door)
       }
-    } finally {
-      spark.conf.set(key, saved)
-      // re-register the session's pizza views with the default layout
-      new graft.api.Engine(spark, pizzaDd, pizzaDir, format = "csv")
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("two Engines over different files in one session each answer over their own rows") {
+    def dirWith(people: String*): String = {
+      val dir = tempDir("graft-engine-rows")
+      for (f <- new java.io.File(pizzaDir).listFiles)
+        java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(dir, f.getName))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "Person.csv"),
+        ("Person.name,Person.age,Person.gender" +: people).mkString("", "\n", "\n"))
+      dir
     }
+    val a = new graft.api.Engine(spark, pizzaDd,
+      dirWith("Ann,20,female", "Bob,30,male"), format = "csv")
+    val b = new graft.api.Engine(spark, pizzaDd, dirWith("Cat,40,female"),
+      format = "csv")
+    def names(df: DataFrame): Set[String] = df.collect().map(_.getString(0)).toSet
+    def answers(eng: graft.api.Engine): Seq[(String, Set[String])] = Seq(
+      "sql" -> names(eng.sql("SELECT name FROM Person")),
+      "sqlDistinct" -> names(eng.sqlDistinct("SELECT name FROM Person")),
+      "scan" -> names(eng.scan("Person").project("name").toDF),
+      "ra" -> names(eng.ra("""\project_{name} Person;""")))
+    for (round <- 1 to 2; (eng, want) <- Seq(a -> Set("Ann", "Bob"), b -> Set("Cat")))
+      for ((door, got) <- answers(eng))
+        assert(got === want, s"round $round, $door")
+    // a view registered outside any Engine is taken back too
+    spark.range(1).selectExpr("'Zed' AS name").createOrReplaceTempView("Person")
+    for ((door, got) <- answers(b)) assert(got === Set("Cat"), s"foreign view, $door")
   }
 
   // ── the injected rules on the contract ─────────────────────────────────
