@@ -62,22 +62,19 @@ private[graft] object Harness {
   /** The load of every process but this JVM over one second. The
     * 1-minute load average still carries work that has ended (sbt's
     * start-up and compile before a probe) and this JVM's own previous
-    * attempt; this window carries neither. Without `/proc/stat`, the load
-    * average is all there is. */
+    * attempt; this window carries neither. The evidence mains run on
+    * Linux: without `/proc/stat` there is no such reading, and the load
+    * average would pass for one under the same keys, so this fails. */
   def sampleLoad(): Load = {
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val own = os match {
-      case b: com.sun.management.OperatingSystemMXBean => () => b.getProcessCpuTime
-      case _ => () => 0L
-    }
     val stat = Paths.get("/proc/stat")
-    val load =
-      if (!Files.isReadable(stat)) math.max(0.0, os.getSystemLoadAverage)
-      else {
-        val (s0, c0, t0) = (Files.readString(stat), own(), System.nanoTime())
-        Thread.sleep(1000)
-        othersCpus(s0, Files.readString(stat), own() - c0, System.nanoTime() - t0)
-      }
+    require(Files.isReadable(stat),
+      "the load band needs /proc/stat (Linux): other processes' CPU cannot be read")
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val (s0, c0, t0) = (Files.readString(stat), os.getProcessCpuTime, System.nanoTime())
+    Thread.sleep(1000)
+    val load = othersCpus(s0, Files.readString(stat), os.getProcessCpuTime - c0,
+      System.nanoTime() - t0)
     Load(load, band(load, Runtime.getRuntime.availableProcessors))
   }
 

@@ -751,13 +751,13 @@ object ScaleProbe {
       val batchE = emb.orderBy(col("vec_id")).limit(200).localCheckpoint()
       private val baseE =
         emb.join(batchE.select("vec_id"), Seq("vec_id"), "left_anti")
-      // untimed: build + SAVE + LOAD both indexes — maintenance acts on
-      // the stored artifact, exactly like a restarted ingest process
-      private val dDir = Files.createTempDirectory("probe-dedup-idx").toString
+      // untimed: build + SAVE + LOAD the indexes (deleted at JVM exit) —
+      // maintenance acts on the stored artifact, like a restarted ingest
+      private val dDir = SessionMemo.tempDir("probe-dedup-idx")
       Dedup.buildIndex(baseD, "doc_id", "text").save(dDir)
-      private val vDir = Files.createTempDirectory("probe-ivf-idx").toString
+      private val vDir = SessionMemo.tempDir("probe-ivf-idx")
       Similarity.fitIvf(baseE).save(vDir)
-      private val pDir = Files.createTempDirectory("probe-pq-idx").toString
+      private val pDir = SessionMemo.tempDir("probe-pq-idx")
       Similarity.fitPq(baseE).save(pDir)
       val idx = Dedup.loadIndex(spark, dDir)
       val ivf = Similarity.loadIvf(spark, vDir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
@@ -56,9 +55,11 @@ object StreamBench {
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-    val dir = Files.createTempDirectory("graft-streambench")
-    val out = dir.resolve("sessions").toString
-    val ckpt = dir.resolve("ckpt").toString
+    // every temp directory is deleted when the JVM exits
+    def tempDir(prefix: String): String = SessionMemo.tempDir(prefix)
+    val dir = tempDir("graft-streambench")
+    val out = s"$dir/sessions"
+    val ckpt = s"$dir/ckpt"
 
     // Robust input accounting: recentProgress is a bounded ring buffer, a
     // listener sums every batch's numInputRows no matter how many fire.
@@ -154,7 +155,7 @@ object StreamBench {
         // index — exactly what a cluster restarting between compaction
         // and ingest would do.
         val built = ops.Dedup.buildIndex(keyedBase(), "doc_id", "text")
-        val index =
+        val index = (
           if (flagStored == "bucketed") {
             // partitioned stored form: bucketed tables, persisted like
             // the parquet path (same memory budget) — the cached scan
@@ -163,18 +164,13 @@ object StreamBench {
             // persist to measure the beyond-cache regime (disk-resident
             // stored side, still exchange/sort-free)
             built.saveBucketed("graft_flag_idx")
-            val idx = ops.Dedup.loadIndexBucketed(spark, "graft_flag_idx")
-              .persist()
-            idx.bands.count(); idx.shingles.count() // build before the clock
-            idx
+            ops.Dedup.loadIndexBucketed(spark, "graft_flag_idx")
           } else {
-            val indexDir = java.nio.file.Files
-              .createTempDirectory("graft-flag-index").toString
+            val indexDir = tempDir("graft-flag-index")
             built.save(indexDir)
-            val idx = ops.Dedup.loadIndex(spark, indexDir).persist()
-            idx.bands.count(); idx.shingles.count() // build before the clock
-            idx
-          }
+            ops.Dedup.loadIndex(spark, indexDir)
+          }).persist()
+        index.bands.count(); index.shingles.count() // build before the clock
         streaming.DocumentStreams.flagAgainstBaseIndexed(keyedDocs(), index,
           broadcastIndex = flagBcast)
       }
@@ -187,8 +183,7 @@ object StreamBench {
         // HALF the arriving docs embed a base doc's text verbatim —
         // each match emits its 31 window flags (W=15 over 45 tokens),
         // every non-match still pays the full rolling scan + probe.
-        val idxDir = java.nio.file.Files
-          .createTempDirectory("graft-spanflag-index").toString
+        val idxDir = tempDir("graft-spanflag-index")
         ops.Dedup.fitSpanIndex(keyedBase(), "doc_id", "text", window = 15)
           .save(idxDir)
         val loaded = ops.Dedup.loadSpanIndex(spark, idxDir)
@@ -205,8 +200,7 @@ object StreamBench {
         // the map hit and the singleton-floor paths run per row.
         val vocabDocs = spark.range(50000L)
           .select(concat_ws(" ", terms("v", col("id"), 10)).as("text"))
-        val freqDir = java.nio.file.Files
-          .createTempDirectory("graft-score-freqs").toString
+        val freqDir = tempDir("graft-score-freqs")
         ops.TextOps.saveTermFreqs(
           ops.TextOps.termFreqs(vocabDocs, "text"), freqDir)
         val freqs = ops.TextOps.loadTermFreqs(spark, freqDir)
@@ -224,8 +218,7 @@ object StreamBench {
         // of a frequency join.
         val vocabDocs = spark.range(50000L).select((col("id") % 2 === 0).as("is_t"),
           concat_ws(" ", terms("w", col("id"), 10)).as("text"))
-        val nbDir = java.nio.file.Files
-          .createTempDirectory("graft-nb-model").toString
+        val nbDir = tempDir("graft-nb-model")
         ops.Classify.saveNbModel(
           ops.Classify.fitNbClassifier(vocabDocs, "text", col("is_t")),
           nbDir)
@@ -308,12 +301,9 @@ object StreamBench {
     // periodic trigger precisely because its static side has a per-batch
     // floor.
     val triggerSecs = sys.env.getOrElse("SPARK_GRAFT_STREAM_TRIGGER", "0").toInt
-    val writer0 = sink.writeStream
-      .option("checkpointLocation", ckpt)
-    val q = (if (triggerSecs > 0)
-      writer0.trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"$triggerSecs seconds"))
-    else writer0)
+    val writer = sink.writeStream.option("checkpointLocation", ckpt)
+    val q = (if (triggerSecs <= 0) writer else writer.trigger(
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(s"$triggerSecs seconds")))
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         // batch-id-keyed egress dir: a batch re-executed after a crash
         // overwrites ITSELF instead of appending a duplicate — the
@@ -351,16 +341,12 @@ object StreamBench {
         (egress.getLong(0), egress.getLong(1))
       } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
     val rowsPerSec = egressEvents / elapsed
-    val metric = mode match {
-      case "sessionize" => "stream_sessionize_rows_per_sec"
-      case "clean"      => "stream_clean_docs_per_sec"
-      case "score"      => "stream_score_docs_per_sec"
-      case "scrub"      => "stream_scrub_docs_per_sec"
-      case "nbscore"    => "stream_nbscore_docs_per_sec"
-      case "bpscrub"    => "stream_bpscrub_docs_per_sec"
-      case "spanflag"   => "stream_spanflag_windows_per_sec"
-      case _            => "stream_flag_pairs_per_sec"
-    }
+    val metric = s"stream_${mode}_" + (mode match {
+      case "sessionize" => "rows"
+      case "spanflag" => "windows"
+      case "flag" => "pairs"
+      case _ => "docs"
+    }) + "_per_sec"
     val flagCfg = if (mode == "flag" || mode == "spanflag")
       s""","flag_base":$flagBase,"broadcast":$flagBcast,"stored":"$flagStored","trigger_secs":$triggerSecs"""
     else ""
@@ -369,10 +355,5 @@ object StreamBench {
     Harness.emit(sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", "stream_bench.json"), line)
 
     spark.stop()
-    // best-effort temp cleanup
-    import scala.jdk.CollectionConverters._
-    try Files.walk(dir).iterator().asScala.toSeq.reverse
-      .foreach(Files.deleteIfExists(_))
-    catch { case scala.util.control.NonFatal(_) => () }
   }
 }

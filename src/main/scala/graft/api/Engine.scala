@@ -32,10 +32,11 @@ import graft.catalog.DataDictionary
   * one in-memory copy per view name: a later Engine registering the
   * name, or [[graft.clearCaches]], frees it.
   *
-  * Each door answers over this Engine's own relations: `scan` and `ra`
-  * read its frames, and `sql`/`sqlDistinct` first take back any view
-  * name another Engine or the contract's SQL door has since replaced.
-  * While the views are its own, a call writes nothing to the catalog.
+  * Each door answers over this Engine's own relations: before it runs,
+  * it takes back any view name another Engine, the contract's SQL door
+  * or a caller has since replaced ([[graft.OwnedViews]]), and caches the
+  * relation again if that replacement dropped its in-memory copy. While
+  * the views are its own, a call writes nothing to the catalog.
   */
 final class Engine(val spark: SparkSession, dd: DataDictionary,
                    dataDir: String, format: String = "parquet") {
@@ -49,39 +50,25 @@ final class Engine(val spark: SparkSession, dd: DataDictionary,
       rel -> (if (small) (df.coalesce(1), true) else (df, false))
     }.toMap
 
-  /** The session's view entry for each name, as this Engine last bound
-    * it: a replaced view is a different entry. */
-  private val bound = scala.collection.mutable.Map.empty[String, AnyRef]
-
-  private def viewOf(rel: String): AnyRef =
-    spark.sessionState.catalog.getRawTempView(rel).orNull
-
-  /** Bind `rel`'s name to this Engine's frame; the first Engine to take
-    * the name after another one caches its frame anew. */
-  private def bind(rel: String): Unit = {
+  /** After `rel`'s name is bound to this Engine's frame: the first Engine
+    * to take the name after another one frees that one's copy and drops
+    * any cached entry for its own plan (a file rewritten at the same path
+    * gives the same plan); any binding caches a small relation that is
+    * not cached, since replacing a view uncaches the replaced one. */
+  private def hold(rel: String): Unit = {
     val (frame, inMemory) = layout(rel)
-    frame.createOrReplaceTempView(rel)
     graft.SessionMemo(spark, s"engine:$rel", this,
         (held: Option[DataFrame]) => held.foreach(_.unpersist())) {
-      if (!inMemory) None
-      else {
-        spark.catalog.uncacheTable(rel)
-        spark.catalog.cacheTable(rel)
-        Some(frame)
-      }
+      if (inMemory) spark.catalog.uncacheTable(rel)
+      Option.when(inMemory)(frame)
     }
-    bound(rel) = viewOf(rel)
+    if (inMemory && !spark.catalog.isCached(rel)) spark.catalog.cacheTable(rel)
   }
 
-  layout.keys.foreach(bind)
-
-  /** Take back every name whose session view is no longer this Engine's. */
-  private def ownViews(): Unit = synchronized {
-    layout.keys.foreach(rel => if (viewOf(rel) ne bound(rel)) bind(rel))
-  }
+  private val views = new graft.OwnedViews(spark, layout.view.mapValues(_._1).toMap, hold)
 
   /** Full Spark SQL over the registered dd views. */
-  def sql(query: String): DataFrame = { ownViews(); spark.sql(query) }
+  def sql(query: String): DataFrame = { views.own(); spark.sql(query) }
 
   /** Reference-parity door: results are SETS regardless of whether the
     * query says DISTINCT (the reference frontend only emits π-with-dedup).
@@ -89,13 +76,18 @@ final class Engine(val spark: SparkSession, dd: DataDictionary,
   def sqlDistinct(query: String): DataFrame = sql(query).distinct()
 
   /** RA-combinator door. A name outside the dd reads the session's table. */
-  def scan(rel: String): Relation =
-    Relation(layout.get(rel).fold(spark.table(rel))(_._1).alias(rel))
+  def scan(rel: String): Relation = { views.own(); frame(rel) }
+
+  private def frame(rel: String): Relation =
+    Relation(views.frames.getOrElse(rel, spark.table(rel)).alias(rel))
 
   /** RA-STRING door: the reference's radb text syntax
     * (`run_radb_query_in_spark` on a string,
     * `ra2spark/ra2spark.py:107-118`), parsed by [[RaParser]] and lowered
     * onto the same [[Relation]] combinators [[scan]] feeds.
     */
-  def ra(query: String): DataFrame = RaParser.parse(query, scan).toDF
+  def ra(query: String): DataFrame = {
+    views.own()
+    RaParser.parse(query, frame).toDF
+  }
 }

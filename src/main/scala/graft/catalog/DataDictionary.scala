@@ -15,17 +15,11 @@ import scala.jdk.CollectionConverters._
   */
 final case class DataDictionary(relations: Map[String, StructType]) {
 
-  /** Register every relation as a temp view over its file, making the whole
-    * dd queryable via `spark.sql`. Supported layouts: parquet (preferred),
-    * ORC, Avro container files, headered CSV, JSON lines, tagged-JSON
-    * (MR wire format), and TPC-H `.tbl`.
+  /** `rel` read from its file under `dataDir` and cast to the dd schema.
+    * Supported layouts: parquet (preferred), ORC, Avro container files,
+    * headered CSV, JSON lines, tagged-JSON (MR wire format), and TPC-H
+    * `.tbl`. An [[graft.api.Engine]] binds these frames as views.
     */
-  def register(spark: SparkSession, dataDir: String,
-               format: String = "parquet"): Unit =
-    relations.keys.foreach { rel =>
-      load(spark, dataDir, rel, format).createOrReplaceTempView(rel)
-    }
-
   def load(spark: SparkSession, dataDir: String, rel: String,
            format: String = "parquet"): DataFrame = {
     val st = relations(rel)

@@ -525,18 +525,16 @@ object AnalyticQueries {
         .getFileStatus(p)).toOption.map(f => (f.getLen, f.getModificationTime))
     }
     // events joins the catalog through the nanos-aware reader (see
-    // pipelineDd scaladoc) — same view name, SQL can't tell. BUILDING
-    // the DataFrame reads parquet footers, so it is memoized with the
-    // views (round-2 verdict #5: per-call footer IO tripled SQL-door
-    // cost)…
-    val events = graft.SessionMemo(s, "sql-door", (dir, stamps)) {
-      fullDd.register(s, dir, "parquet")
-      graft.events(s, dir)
-    }
-    // …but RE-BINDING the cached plan is IO-free, so do that every call:
-    // a caller that dropped or shadowed the session's `events` view
-    // would otherwise silently resolve against the wrong view forever.
-    events.createOrReplaceTempView("events")
+    // pipelineDd scaladoc) — same view name, SQL can't tell. Building
+    // the frames reads parquet footers, so they are memoized (round-2
+    // verdict #5: per-call footer IO tripled SQL-door cost); each call
+    // only takes back the names an Engine or a caller has since
+    // replaced or dropped, which is IO-free.
+    graft.SessionMemo(s, "sql-door", (dir, stamps)) {
+      new graft.OwnedViews(s, fullDd.relations.keys.map(r =>
+        r -> fullDd.load(s, dir, r, "parquet")).toMap +
+        ("events" -> graft.events(s, dir)))
+    }.own()
     s.sql(query)
   }
 

@@ -196,17 +196,28 @@ class RaParitySpec extends SparkSpec {
     val b = new graft.api.Engine(spark, pizzaDd, dirWith("Cat,40,female"),
       format = "csv")
     def names(df: DataFrame): Set[String] = df.collect().map(_.getString(0)).toSet
-    def answers(eng: graft.api.Engine): Seq[(String, Set[String])] = Seq(
-      "sql" -> names(eng.sql("SELECT name FROM Person")),
-      "sqlDistinct" -> names(eng.sqlDistinct("SELECT name FROM Person")),
-      "scan" -> names(eng.scan("Person").project("name").toDF),
-      "ra" -> names(eng.ra("""\project_{name} Person;""")))
-    for (round <- 1 to 2; (eng, want) <- Seq(a -> Set("Ann", "Bob"), b -> Set("Cat")))
-      for ((door, got) <- answers(eng))
-        assert(got === want, s"round $round, $door")
+    def doors(eng: graft.api.Engine): Seq[(String, () => DataFrame)] = Seq(
+      "sql" -> (() => eng.sql("SELECT name FROM Person")),
+      "sqlDistinct" -> (() => eng.sqlDistinct("SELECT name FROM Person")),
+      "scan" -> (() => eng.scan("Person").project("name").toDF),
+      "ra" -> (() => eng.ra("""\project_{name} Person;""")))
+    def check(eng: graft.api.Engine, door: String, want: Set[String],
+              when: String): Unit = {
+      val df = doors(eng).toMap.apply(door)()
+      // the small relation is served from memory again after a rebind
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("In-memory table Person"), s"$when, $door:\n$plan")
+      assert(names(df) === want, s"$when, $door")
+    }
+    // each door is the first call after the other Engine took the names
+    for (round <- 1 to 2; (door, _) <- doors(a);
+         (eng, want) <- Seq(a -> Set("Ann", "Bob"), b -> Set("Cat")))
+      check(eng, door, want, s"round $round")
     // a view registered outside any Engine is taken back too
-    spark.range(1).selectExpr("'Zed' AS name").createOrReplaceTempView("Person")
-    for ((door, got) <- answers(b)) assert(got === Set("Cat"), s"foreign view, $door")
+    for ((door, _) <- doors(b)) {
+      spark.range(1).selectExpr("'Zed' AS name").createOrReplaceTempView("Person")
+      check(b, door, Set("Cat"), "foreign view")
+    }
   }
 
   // ── the injected rules on the contract ─────────────────────────────────

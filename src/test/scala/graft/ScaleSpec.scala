@@ -663,6 +663,28 @@ class ScaleSpec extends SparkSpec {
     graft.clearCaches(spark)
   }
 
+  test("sql door and an Engine over the same names each answer over their own files") {
+    val q31 = SparkEntry.queries("q31_sql_agg")
+    def door = q31(spark, sfDir).collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val dir = fixtureCopy("graft-door-engine")
+    rewrite(table(spark, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
+      s"$dir/orders.parquet")
+    val eng = new graft.api.Engine(spark, tpchDd, dir)
+    def priorities = {
+      val df = eng.sql("SELECT DISTINCT o_orderpriority FROM orders")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("In-memory table orders"), plan)
+      df.count()
+    }
+    val want = door
+    assert(want.size > 1, "sf0.001 orders over the q31 price cut span several priorities")
+    for (round <- 1 to 2) {
+      assert(priorities === 1, s"round $round: the Engine reads its own orders")
+      assert(door === want, s"round $round: the door reads its own dir's orders")
+    }
+    graft.clearCaches(spark)
+  }
+
   test("clearCaches frees an Engine's in-memory relations") {
     val eng = new graft.api.Engine(spark, tpchDd, sfDir)
     eng.sql("SELECT count(*) FROM orders").collect()
